@@ -2,13 +2,19 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** The reference's CTR KTable as a foreachBatch merge target
   * (SURVEY.md §3.2: update-mode aggregation can't chain after a
   * stream-stream join, so the per-batch increments get merged into an
   * external keyed table).
+  *
+  * Table schema: (ad_id, num_impressions, num_clicks, last_batch) —
+  * `last_batch` is the highest foreachBatch id that touched the row, so
+  * a batch's changed keys are read back from the merged table alone
+  * ([[touchedBy]]) without executing the batch a second time.
   *
   * The merge is fully distributed: each batch's increments (already
   * aggregated to group cardinality by ctrIncrements) are unioned with
@@ -31,14 +37,20 @@ final class CtrStore(dir: String) {
   // the whole point of a PERSISTED merge target
   private val store = new VersionedParquetStore(dir, adoptExisting = true)
 
-  /** Current table as a DataFrame: (ad_id, num_impressions, num_clicks). */
+  /** Current table as a DataFrame: (ad_id, num_impressions, num_clicks,
+    * last_batch). Read with the declared schema: no footer-inference
+    * job per read, and a version written before `last_batch` existed
+    * reads it as null. */
   def table(spark: SparkSession): DataFrame = store.current match {
-    case None =>
-      import spark.implicits._
-      Seq.empty[(String, Long, Long)]
-        .toDF("ad_id", "num_impressions", "num_clicks")
-    case Some(d) => spark.read.parquet(d)
+    case None => spark.createDataFrame(java.util.List.of[Row](), CtrStore.Schema)
+    case Some(d) => spark.read.schema(CtrStore.Schema).parquet(d)
   }
+
+  /** The rows the merge of `batchId` touched, with their merged totals.
+    * A stream replays only its last batch, so a replay (merge skipped)
+    * reads the same rows again. */
+  def touchedBy(spark: SparkSession, batchId: Long): DataFrame =
+    table(spark).filter(col("last_batch") === batchId)
 
   /** Merge a batch of (ad_id, num_impressions, num_clicks) increments:
     * union + keyed re-aggregation + copy-on-write publish. Pass the
@@ -49,12 +61,14 @@ final class CtrStore(dir: String) {
     val inc = increments.select(
       col("ad_id"),
       col("num_impressions").cast("long").as("num_impressions"),
-      col("num_clicks").cast("long").as("num_clicks"))
+      col("num_clicks").cast("long").as("num_clicks"),
+      lit(batchId).as("last_batch"))
     store.publish(batchId) { nextDir =>
       table(spark).unionByName(inc)
         .groupBy(col("ad_id"))
         .agg(sum(col("num_impressions")).as("num_impressions"),
-          sum(col("num_clicks")).as("num_clicks"))
+          sum(col("num_clicks")).as("num_clicks"),
+          max(col("last_batch")).as("last_batch"))
         .write.mode(SaveMode.Overwrite).parquet(nextDir)
     }
   }
@@ -73,4 +87,12 @@ final class CtrStore(dir: String) {
       ad -> (imps, clks, ctr)
     }.toMap
   }
+}
+
+object CtrStore {
+  private val Schema: StructType = new StructType()
+    .add("ad_id", StringType)
+    .add("num_impressions", LongType)
+    .add("num_clicks", LongType)
+    .add("last_batch", LongType)
 }

@@ -83,25 +83,21 @@ object StreamingPipelines {
     * BATCH ID — an at-least-once replay after a restart must be a
     * merge no-op, not a double count — then return the update records
     * for ONLY the ads this batch touched, read back from the merged
-    * table. KTable semantics: the reference emits changed keys only
-    * (SURVEY.md §1.1 changelog view), not the whole table, and at real
-    * ad cardinality a full-table emit per batch is output
-    * amplification plus a driver collect. Here the touched-ad set is
-    * group-cardinality (≤ |ads in batch|), broadcast into a LEFT SEMI
-    * against the merged table, and the caller writes the result
-    * DISTRIBUTED (no collect anywhere on the path). A replayed batch
-    * re-emits its touched ads with the already-merged (correct)
-    * values — at-least-once output, never a double count. */
+    * table by their `last_batch` tag. KTable semantics: the reference
+    * emits changed keys only (SURVEY.md §1.1 changelog view), not the
+    * whole table. The joined batch executes once, inside the merge's
+    * write: the emission reads only the published version, and the
+    * caller writes it DISTRIBUTED (no collect anywhere on the path). A
+    * replayed batch skips the merge and re-emits its touched ads with
+    * the already-merged (correct) values — at-least-once output, never
+    * a double count. */
   def ctrBatchUpdates(store: CtrStore, joinedBatch: DataFrame,
       batchId: Long): DataFrame = {
-    val increments = ctrIncrements(joinedBatch)
-    store.merge(increments, batchId)
-    val touched = increments.select(col("ad_id")).distinct()
-    val merged = store.table(joinedBatch.sparkSession)
-      .join(broadcast(touched), Seq("ad_id"), "left_semi")
-    merged.select(col("ad_id"),
+    store.merge(ctrIncrements(joinedBatch), batchId)
+    val touched = store.touchedBy(joinedBatch.sparkSession, batchId)
+    touched.select(col("ad_id"),
       col("num_impressions"), col("num_clicks"),
-      ClickThroughRate.ctrFaithful(merged).as("ctr"))
+      ClickThroughRate.ctrFaithful(touched).as("ctr"))
   }
 
   /** Streaming exact dedup: drop repeats of `idCols` arriving within the

@@ -46,9 +46,11 @@ object TopologyApps {
     * → click-through-rate topic. CTR is maintained via the foreachBatch
     * store UNDER THE BATCH ID (an at-least-once replay after a broker/
     * driver restart merges as a no-op — CtrStore's replay guard), and
-    * each batch emits ONLY its touched ads' update records, written
-    * distributed from the merged table (KTable changed-keys-only
-    * semantics; no driver collect, no full-table re-emit). The body is
+    * each batch emits ONLY its touched ads' update records, read from
+    * the merged table by the batch id the merge tagged them with and
+    * written distributed (KTable changed-keys-only semantics; no driver
+    * collect, no full-table re-emit). The joined batch executes once
+    * per trigger, inside the merge. The body is
     * [[StreamingPipelines.ctrBatchUpdates]], spec'd broker-free in
     * CtrStoreSpec. */
   object ClickThroughRateApp {
