@@ -49,7 +49,8 @@ import graft.streaming.VersionedParquetStore
   * replay-guard survival, and merge-after-restart byte equality.
   */
 final class BloomStore(dir: String, expectedItems: Long,
-    fpp: Double = 0.01, nShards: Int = 16) {
+    fpp: Double = 0.01, nShards: Int = 16)
+    extends graft.streaming.ReplayGuarded {
 
   def this(expectedItems: Long) =
     this(Files.createTempDirectory("graft-bloom-store").toString, expectedItems)
@@ -60,7 +61,7 @@ final class BloomStore(dir: String, expectedItems: Long,
 
   private val perShardCapacity: Long = math.max(1L, expectedItems / nShards)
 
-  private val store = new VersionedParquetStore(dir, adoptExisting = true)
+  private val store = new VersionedParquetStore(dir)
   // (serialized shards, gate holder) — immutable once published; the
   // holder's Broadcast re-ships per publish, replacing the previous
   @volatile private var published: Option[(Array[Array[Byte]], ShardedBloomHolder)] = None

@@ -42,7 +42,7 @@ final class EmbStore(name: String, buckets: Int = 32, nTables: Int = 8,
     bucketPointer: graft.streaming.StorePointer =
       new graft.streaming.InMemoryPointer,
     vecPointer: graft.streaming.StorePointer =
-      new graft.streaming.InMemoryPointer) {
+      new graft.streaming.InMemoryPointer) extends graft.streaming.Segmented {
 
   private def requireCol(df: DataFrame, colName: String, dt: DataType,
       what: String): Unit = {

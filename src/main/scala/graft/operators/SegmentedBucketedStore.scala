@@ -50,7 +50,8 @@ import graft.streaming.{InMemoryPointer, StorePointer, VersionedParquetStore}
   */
 private[graft] abstract class SegmentedBucketedStore(
     name: String, bucketCol: String, buckets: Int,
-    pointer: StorePointer = new InMemoryPointer) {
+    pointer: StorePointer = new InMemoryPointer)
+    extends graft.streaming.Segmented {
 
   import SegmentedBucketedStore._
 

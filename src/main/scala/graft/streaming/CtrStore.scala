@@ -32,10 +32,10 @@ final class CtrStore(dir: String) {
 
   def this() = this(Files.createTempDirectory("graft-ctr-store").toString)
 
-  // adoptExisting: a restarted driver resumes the committed version
+  // restart adoption: a restarted JVM resumes the committed version
   // (and its replay guard) instead of silently zeroing the KTable —
   // the whole point of a PERSISTED merge target
-  private val store = new VersionedParquetStore(dir, adoptExisting = true)
+  private val store = new VersionedParquetStore(dir)
 
   /** Current table as a DataFrame: (ad_id, num_impressions, num_clicks,
     * last_batch). Read with the declared schema: no footer-inference

@@ -25,12 +25,12 @@ import org.apache.spark.sql.functions._
   * layout, closing the one seam where a silent parameter change could
   * corrupt an already-emitted stream. */
 private[streaming] abstract class ShardLayoutStore(
-    val nShards: Int, val budget: Int, dir: String) {
+    val nShards: Int, val budget: Int, dir: String) extends ReplayGuarded {
 
   require(nShards >= 1, s"nShards must be >= 1, got $nShards")
   require(budget >= 1, s"budget must be >= 1, got $budget")
 
-  protected val store = new VersionedParquetStore(dir, adoptExisting = true)
+  protected val store = new VersionedParquetStore(dir)
 
   locally {
     // store TYPE rides along with the parameters: a PaddedPackStore

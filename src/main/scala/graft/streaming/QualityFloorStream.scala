@@ -42,7 +42,7 @@ import graft.operators.TextAnalysis
   * eager emission accept the lag.
   */
 final class QualityFloorStore(keepFrac: Double, dir: String,
-    keyBp: Column => Column = TextAnalysis.qualityBp) {
+    keyBp: Column => Column = TextAnalysis.qualityBp) extends ReplayGuarded {
 
   def this(keepFrac: Double) =
     this(keepFrac, Files.createTempDirectory("graft-qfloor-store").toString)
@@ -57,7 +57,7 @@ final class QualityFloorStore(keepFrac: Double, dir: String,
   require(keepFrac > 0 && keepFrac <= 1,
     s"keepFrac must be in (0, 1], got $keepFrac")
 
-  private val store = new VersionedParquetStore(dir, adoptExisting = true)
+  private val store = new VersionedParquetStore(dir)
   @volatile private var publishedCutoff: Option[Long] = None
   // a committed histogram adopted from a previous JVM still needs its
   // cutoff recomputed (that takes a SparkSession the constructor
@@ -166,7 +166,7 @@ final class QualityFloorStore(keepFrac: Double, dir: String,
   * global store's no-corpus-no-floor empty view. Cutoff-lag semantics
   * are the global store's, per group. */
 final class GroupedQualityFloorStore(keepFrac: Double, val groupCol: String,
-    dir: String) {
+    dir: String) extends ReplayGuarded {
 
   def this(keepFrac: Double, groupCol: String) =
     this(keepFrac, groupCol,
@@ -175,7 +175,7 @@ final class GroupedQualityFloorStore(keepFrac: Double, val groupCol: String,
   require(keepFrac > 0 && keepFrac <= 1,
     s"keepFrac must be in (0, 1], got $keepFrac")
 
-  private val store = new VersionedParquetStore(dir, adoptExisting = true)
+  private val store = new VersionedParquetStore(dir)
   @volatile private var publishedCutoffs: Map[String, Long] = Map.empty
   @volatile private var adoptionPending: Boolean = store.current.nonEmpty
 
@@ -283,7 +283,8 @@ final class GroupedQualityFloorStore(keepFrac: Double, val groupCol: String,
   * re-bucket earlier docs, exactly like the batch form re-run on the
   * grown corpus. */
 final class GroupedBucketStore(fracs: Seq[Double], labels: Seq[String],
-    val groupCol: String, dir: String, keyBp: Column => Column) {
+    val groupCol: String, dir: String, keyBp: Column => Column)
+    extends ReplayGuarded {
 
   def this(fracs: Seq[Double], labels: Seq[String], groupCol: String,
       keyBp: Column => Column) =
@@ -296,7 +297,7 @@ final class GroupedBucketStore(fracs: Seq[Double], labels: Seq[String],
   require(labels.size == fracs.size + 1,
     s"need one label per frac plus the remainder, got $labels")
 
-  private val store = new VersionedParquetStore(dir, adoptExisting = true)
+  private val store = new VersionedParquetStore(dir)
   // per-frac, group(string form, see GroupedQualityFloorStore) → cutoff
   @volatile private var publishedCuts: Seq[Map[String, Long]] = Seq.empty
   @volatile private var adoptionPending: Boolean = store.current.nonEmpty

@@ -16,15 +16,89 @@ import graft.sources.DelimitedCodec
   */
 object StreamingPipelines {
 
-  /** The ingest loops' compaction cadence: fold a store's segments once
-    * more than this many are live. Bounds BOTH small-file growth and
-    * the probe-side Exchange a multi-segment store pays (a compacted
-    * store is one bare partitioning-reporting bucketed scan) while
-    * keeping each compaction O(corpus)/budget-amortized over the
-    * merges since the last one. A long-running stream without ANY
-    * compaction would accumulate one segment per trigger forever —
-    * unbounded file count, permanent probe shuffle. */
+  /** The ingest loops' compaction cadence: [[ingestStep]] folds a
+    * segmented store once more than this many segments are live (the
+    * `maxSegments` default; loops without that parameter use it as
+    * is). Bounds BOTH small-file growth and the probe-side Exchange a
+    * multi-segment store pays (a compacted store is one bare
+    * partitioning-reporting bucketed scan) while keeping each
+    * compaction O(corpus)/budget-amortized over the merges since the
+    * last one. A long-running stream without ANY compaction would
+    * accumulate one segment per trigger forever — unbounded file
+    * count, permanent probe shuffle. */
   val DefaultSegmentBudget: Int = 8
+
+  /** The ONE ingest step of the store-backed foreachBatch bodies —
+    * the at-least-once contract they share (a micro-batch re-executes
+    * under the SAME `batchId` after a sink failure or a restart, and
+    * must neither double-merge nor pay its batch artifact twice):
+    *
+    *  1. on a replayed `batchId` return the LAZY `out` — the store
+    *     already holds the batch, so nothing is checkpointed or
+    *     published and the sink's write is the only execution;
+    *  2. otherwise take the seam checkpoint of `out` (skipped with
+    *     `checkpoint = false` where it saves nothing: the index-only
+    *     loops pass the batch through, and a few loops publish a frame
+    *     checkpointed upstream). The checkpoint is LAZY: the publish
+    *     action materializes it, and the caller's sink then reads that
+    *     one materialization instead of re-running the probe lineage
+    *     (and a file source's batch read) — or, when `publish` reads
+    *     other frames, the sink write is its one materialization;
+    *  3. run `publish` on the checkpointed frame;
+    *  4. compact the store against `maxSegments` when it is
+    *     [[Segmented]] (a versioned store publishes one whole version
+    *     per merge and only gets the guard).
+    *
+    * A probe built BEFORE the step keeps scoring the pre-merge store
+    * even when it materializes after `publish` (the drift monitors'
+    * score-before-merge): `table` pins the immutable segment or
+    * version list when it is called, and a compaction or publish keeps
+    * what it retires for one more generation, the readers' window. */
+  private[streaming] def ingestStep(store: ReplayGuarded, batchId: Long,
+      out: DataFrame, maxSegments: Int = DefaultSegmentBudget,
+      checkpoint: Boolean = true)(publish: DataFrame => Unit): DataFrame =
+    if (store.isReplay(batchId)) out
+    else {
+      val published = if (checkpoint) out.seamCheckpoint() else out
+      publish(published)
+      store match {
+        case s: Segmented => s.compactIfNeeded(out.sparkSession, maxSegments)
+        case _ =>
+      }
+      published
+    }
+
+  /** The loops' id contract, enforced before the probe is even built:
+    * a non-long id would union-coerce against the store's long-keyed
+    * schema and break type resolution mid-plan, or fail late inside
+    * the merge with a message about a DERIVED frame, not the caller's
+    * input. */
+  private def requireLongIds(caller: String, store: AnyRef,
+      batch: DataFrame, idCol: String, kind: String = "doc"): Unit = {
+    val t = batch.schema(idCol).dataType
+    require(t == org.apache.spark.sql.types.LongType,
+      s"$caller requires LONG $kind ids (the " +
+        s"${store.getClass.getSimpleName} schema), got ${t.catalogString}" +
+        " — map ids to a surrogate long (e.g. xxhash64) first")
+  }
+
+  /** The store's corpus view EXCLUDING the batch's own ids (`key` is
+    * the store's id column): a doc never near-dups itself, and on an
+    * at-least-once REPLAY (survivors already merged) this restores the
+    * original run's exact probe input — bucket-cap counts included —
+    * so the replay computes the same drop set instead of
+    * double-counting the batch's rows in the cap. */
+  private def seenView(store: graft.operators.SegmentedBucketedStore,
+      batch: DataFrame, idCol: String, key: String): DataFrame =
+    store.table(batch.sparkSession).join(
+      broadcast(batch.select(col(idCol).as(key))), Seq(key), "left_anti")
+
+  /** Survivors' text digests into the exact-gate bloom sketch. */
+  private[streaming] def mergeTextHashes(
+      exactStore: graft.operators.BloomStore, rows: DataFrame,
+      textCol: String, batchId: Long): Unit =
+    exactStore.merge(rows.select(md5(col(textCol)).as("text_hash"))
+      .filter(col("text_hash").isNotNull), "text_hash", batchId)
 
   /** The full Aggregations topology (SURVEY.md §3.1): CSV lines →
     * FAILFAST decode → event time from the embedded orderTimeMs field →
@@ -206,39 +280,14 @@ object StreamingPipelines {
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
     import graft.operators.Dedup
-    val spark = batch.sparkSession
-    // same contract as BandStore.merge, enforced before the probe is
-    // even built: a non-long id would union-coerce against the store's
-    // long-keyed schema and break type resolution mid-plan
-    require(batch.schema(idCol).dataType == org.apache.spark.sql.types.LongType,
-      s"nearDupIngestBatch requires LONG doc ids (the BandStore schema), got " +
-        s"${batch.schema(idCol).dataType.catalogString} — map ids to a " +
-        "surrogate long (e.g. xxhash64) first")
-    // the corpus view EXCLUDES the batch's own ids: a doc never
-    // near-dups itself, and on an at-least-once REPLAY (survivors'
-    // bands already merged) this restores the original run's exact
-    // probe input — bucket-cap counts included — so the replay
-    // computes the same drop set instead of double-counting the
-    // batch's bands in the cap
-    val seenView = store.table(spark).join(
-      broadcast(batch.select(col(idCol).as("doc_id"))), Seq("doc_id"), "left_anti")
+    requireLongIds("nearDupIngestBatch", store, batch, idCol)
     val pairs = Dedup.incrementalMinhashLshMd5FromStore(
-      batch, seenView,
+      batch, seenView(store, batch, idCol, "doc_id"),
       Dedup.shingleTable(seenDocs, idCol, textCol), idCol, textCol,
       threshold = threshold, maxBucketSize = maxBucketSize)
-    val survivors0 = dropSurvivors(batch, pairs, idCol, "doc_a", "doc_b")
-    // on a replay the merge below would no-op — return the LAZY
-    // survivors (the sink re-emits once) instead of re-materializing
-    if (store.isReplay(batchId)) return survivors0
-    // eager checkpoint: the store merge below is an action over the
-    // survivors' lineage (the whole probe pipeline), and the caller's
-    // sink write would re-execute it — materialize once
-    val survivors = survivors0.seamCheckpoint()
-    store.merge(Dedup.md5Bands(survivors, idCol, textCol), batchId)
-    // the periodic fold that pays back append-only merges: without it
-    // the store is an ever-growing per-trigger segment list
-    store.compactIfNeeded(spark, maxSegments)
-    survivors
+    ingestStep(store, batchId,
+      dropSurvivors(batch, pairs, idCol, "doc_a", "doc_b"), maxSegments)(
+      s => store.merge(Dedup.md5Bands(s, idCol, textCol), batchId))
   }
 
   /** Winnow dedup-at-ingest — the [[nearDupIngestBatch]] loop over the
@@ -257,18 +306,11 @@ object StreamingPipelines {
       batch: DataFrame, idCol: String, textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val spark = batch.sparkSession
-    require(batch.schema(idCol).dataType == org.apache.spark.sql.types.LongType,
-      s"winnowIngestBatch requires LONG doc ids (the WinnowStore schema), " +
-        s"got ${batch.schema(idCol).dataType.catalogString} — map ids to " +
-        "a surrogate long (e.g. xxhash64) first")
+    requireLongIds("winnowIngestBatch", store, batch, idCol)
     val pairs = store.probe(batch, idCol, textCol, excludeBatchIds = true)
-    val survivors0 = dropSurvivors(batch, pairs, idCol, "doc_a", "doc_b")
-    if (store.isReplay(batchId)) return survivors0
-    val survivors = survivors0.seamCheckpoint()
-    store.ingest(survivors, idCol, textCol, batchId)
-    store.compactIfNeeded(spark, maxSegments)
-    survivors
+    ingestStep(store, batchId,
+      dropSurvivors(batch, pairs, idCol, "doc_a", "doc_b"), maxSegments)(
+      store.ingest(_, idCol, textCol, batchId))
   }
 
   /** SimHash dedup-at-ingest — the [[nearDupIngestBatch]] loop over the
@@ -297,21 +339,13 @@ object StreamingPipelines {
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
     import graft.operators.Dedup
-    val spark = batch.sparkSession
-    require(batch.schema(idCol).dataType == org.apache.spark.sql.types.LongType,
-      s"simhashIngestBatch requires LONG doc ids (the SimhashStore " +
-        s"schema), got ${batch.schema(idCol).dataType.catalogString} — " +
-        "map ids to a surrogate long (e.g. xxhash64) first")
-    val seenView = store.table(spark).join(
-      broadcast(batch.select(col(idCol).as("doc_id"))), Seq("doc_id"), "left_anti")
-    val pairs = Dedup.incrementalSimhashMd5FromStore(batch, seenView,
-      idCol, textCol, maxHamming = maxHamming, maxBucketSize = maxBucketSize)
-    val survivors0 = dropSurvivors(batch, pairs, idCol, "doc_a", "doc_b")
-    if (store.isReplay(batchId)) return survivors0
-    val survivors = survivors0.seamCheckpoint()
-    store.merge(Dedup.md5SimhashBands(survivors, idCol, textCol), batchId)
-    store.compactIfNeeded(spark, maxSegments)
-    survivors
+    requireLongIds("simhashIngestBatch", store, batch, idCol)
+    val pairs = Dedup.incrementalSimhashMd5FromStore(batch,
+      seenView(store, batch, idCol, "doc_id"), idCol, textCol,
+      maxHamming = maxHamming, maxBucketSize = maxBucketSize)
+    ingestStep(store, batchId,
+      dropSurvivors(batch, pairs, idCol, "doc_a", "doc_b"), maxSegments)(
+      s => store.merge(Dedup.md5SimhashBands(s, idCol, textCol), batchId))
   }
 
   /** BM25 index-at-ingest — the posting-store loop ([[graft.operators
@@ -332,15 +366,9 @@ object StreamingPipelines {
       idCol: String, textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val spark = batch.sparkSession
-    require(batch.schema(idCol).dataType == org.apache.spark.sql.types.LongType,
-      s"lexIngestBatch requires LONG doc ids (the LexStore schema), got " +
-        s"${batch.schema(idCol).dataType.catalogString} — map ids to a " +
-        "surrogate long (e.g. xxhash64) first")
-    if (store.isReplay(batchId)) return batch
-    store.ingest(batch, idCol, textCol, batchId)
-    store.compactIfNeeded(spark, maxSegments)
-    batch
+    requireLongIds("lexIngestBatch", store, batch, idCol)
+    ingestStep(store, batchId, batch, maxSegments, checkpoint = false)(
+      store.ingest(_, idCol, textCol, batchId))
   }
 
   /** Drift-monitor-at-ingest — the data-quality tripwire in front of
@@ -365,28 +393,22 @@ object StreamingPipelines {
       idCol: String, textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val spark = batch.sparkSession
-    import org.apache.spark.sql.functions._
-    require(batch.schema(idCol).dataType == org.apache.spark.sql.types.LongType,
-      s"driftMonitorBatch requires LONG doc ids (the LexStore schema), got " +
-        s"${batch.schema(idCol).dataType.catalogString} — map ids to a " +
-        "surrogate long (e.g. xxhash64) first")
-    val seenCounts = store.table(spark)
-      .filter(col("term").isNotNull)
-      .groupBy(col("term")).agg(sum(col("tf")).as("n"))
-      .select(col("term").as("word"), col("n"))
-    // materialize the drift row BEFORE the merge mutates the store
-    // view the probe reads (the lazy frame would otherwise score the
-    // batch against a baseline that already contains it)
-    val drift = graft.operators.TextAnalysis
-      .jsDriftVsCorpus(batch, textCol, seenCounts)
-      .seamCheckpoint()
-    if (!store.isReplay(batchId)) {
-      store.ingest(batch, idCol, textCol, batchId)
-      store.compactIfNeeded(spark, maxSegments)
-    }
+    requireLongIds("driftMonitorBatch", store, batch, idCol)
+    val drift = corpusDrift(store, batch, textCol).seamCheckpoint()
+    ingestStep(store, batchId, batch, maxSegments, checkpoint = false)(
+      store.ingest(_, idCol, textCol, batchId))
     drift
   }
+
+  /** JS drift of `batch` against the corpus term counts folded from the
+    * posting store (sum(tf) by term) — the probe of both whole-corpus
+    * drift loops. */
+  private def corpusDrift(store: graft.operators.LexStore,
+      batch: DataFrame, textCol: String): DataFrame =
+    graft.operators.TextAnalysis.jsDriftVsCorpus(batch, textCol,
+      store.table(batch.sparkSession).filter(col("term").isNotNull)
+        .groupBy(col("term")).agg(sum(col("tf")).as("n"))
+        .select(col("term").as("word"), col("n")))
 
   /** JS-drift level (nats) above which an arriving batch is
     * QUARANTINED instead of curated — the named default for
@@ -456,33 +478,22 @@ object StreamingPipelines {
       quarantineNats: Double = DriftQuarantineNats,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val spark = batch.sparkSession
-    import org.apache.spark.sql.functions._
-    val seenCounts = driftStore.table(spark)
-      .filter(col("term").isNotNull)
-      .groupBy(col("term")).agg(sum(col("tf")).as("n"))
-      .select(col("term").as("word"), col("n"))
     // the gate scalar: ≤ 1 row, the bounded-driver-read convention
-    val js = graft.operators.TextAnalysis
-      .jsDriftVsCorpus(batch, textCol, seenCounts)
+    val js = corpusDrift(driftStore, batch, textCol)
       .select(col("js_nats")).collect().headOption.map(_.getDouble(0))
     if (js.exists(_ > quarantineNats)) {
-      if (!heldStore.isReplay(batchId)) {
-        heldStore.merge(batch.select(lit(batchId).as("batch_id"),
+      ingestStep(heldStore, batchId, batch, maxSegments, checkpoint = false)(
+        b => heldStore.merge(b.select(lit(batchId).as("batch_id"),
           col(idCol).as("doc_id"), col(langCol).as("lang"),
-          col(textCol).as("text")), batchId)
-        heldStore.compactIfNeeded(spark, maxSegments)
-      }
+          col(textCol).as("text")), batchId))
       // zero survivors, schema identical to the accepted path's (the
       // lazy limit(0) never runs the scoring and touches no store)
       graft.operators.TextAnalysis.stratifiedSample(
         batch.withColumn("quality_bp", floorStore.qualityBp(col(textCol))),
         langCol, idCol, ratesBp, defaultBp).limit(0)
     } else {
-      if (!driftStore.isReplay(batchId)) {
-        driftStore.ingest(batch, idCol, textCol, batchId)
-        driftStore.compactIfNeeded(spark, maxSegments)
-      }
+      ingestStep(driftStore, batchId, batch, maxSegments, checkpoint = false)(
+        driftStore.ingest(_, idCol, textCol, batchId))
       curateIngestBatch(floorStore, exactStore, bandStore, seenDocs,
         batch, idCol, textCol, langCol, ratesBp, defaultBp, threshold,
         maxBucketSize, batchId, maxSegments)
@@ -510,20 +521,13 @@ object StreamingPipelines {
       batch: DataFrame, srcCol: String, textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val spark = batch.sparkSession
-    import org.apache.spark.sql.functions._
-    val seenCounts = store.histogram(spark)
+    val seenCounts = store.histogram(batch.sparkSession)
       .select(col("g").as("grp"), col("word"), col("n"))
-    // materialize the drift rows BEFORE the merge mutates the store
-    // view the probe reads (the lazy frame would otherwise score the
-    // batch against a baseline that already contains it)
     val drift = graft.operators.TextAnalysis
       .jsDriftBySourceCounts(batch, srcCol, textCol, seenCounts)
       .seamCheckpoint()
-    if (!store.isReplay(batchId)) {
-      store.ingest(batch, srcCol, textCol, batchId)
-      store.compactIfNeeded(spark, maxSegments)
-    }
+    ingestStep(store, batchId, batch, maxSegments, checkpoint = false)(
+      store.ingest(_, srcCol, textCol, batchId))
     drift
   }
 
@@ -539,13 +543,9 @@ object StreamingPipelines {
   def cmsIngestBatch(store: graft.operators.CmsStore, batch: DataFrame,
       textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val spark = batch.sparkSession
-    if (store.isReplay(batchId)) return batch
-    store.ingest(batch, textCol, batchId)
-    store.compactIfNeeded(spark, maxSegments)
-    batch
-  }
+      maxSegments: Int = DefaultSegmentBudget): DataFrame =
+    ingestStep(store, batchId, batch, maxSegments, checkpoint = false)(
+      store.ingest(_, textCol, batchId))
 
   /** Quantile-state-at-ingest — [[cmsIngestBatch]]'s sibling over the
     * per-group value-histogram store
@@ -562,13 +562,9 @@ object StreamingPipelines {
       batch: DataFrame, groupCol: String,
       value: org.apache.spark.sql.Column,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val spark = batch.sparkSession
-    if (store.isReplay(batchId)) return batch
-    store.ingest(batch, groupCol, value, batchId)
-    store.compactIfNeeded(spark, maxSegments)
-    batch
-  }
+      maxSegments: Int = DefaultSegmentBudget): DataFrame =
+    ingestStep(store, batchId, batch, maxSegments, checkpoint = false)(
+      store.ingest(_, groupCol, value, batchId))
 
   /** The ONE drop policy of the store-backed ingest loops (text and
     * vector — a divergence here would silently split their dedup
@@ -701,12 +697,10 @@ object StreamingPipelines {
       idCol, textCol)
     val out = nearDupIngestBatch(bandStore, seenDocs, exactSurvivors,
       idCol, textCol, threshold, maxBucketSize, batchId, maxSegments)
-    // survivors' hashes into the sketch — out is already materialized
-    // (localCheckpoint inside nearDupIngestBatch) on the non-replay path
-    if (!exactStore.isReplay(batchId))
-      exactStore.merge(out.select(md5(col(textCol)).as("text_hash"))
-        .filter(col("text_hash").isNotNull), "text_hash", batchId)
-    out
+    // survivors' hashes into the sketch — out is already checkpointed
+    // (inside nearDupIngestBatch) on the non-replay path
+    ingestStep(exactStore, batchId, out, checkpoint = false)(
+      mergeTextHashes(exactStore, _, textCol, batchId))
   }
 
   /** The COMPLETE curation ingest with token-level boilerplate removal
@@ -783,7 +777,8 @@ object StreamingPipelines {
       .filter(col("partner_in_batch").isNull || col("partner") < col("aid"))
       .select(col("aid").as(idCol)).distinct()
       .withColumn("img_dup", lit(true))
-    mediaStore.ingest(bh, batchId)
+    ingestStep(mediaStore, batchId, bh, checkpoint = false)(
+      mediaStore.ingest(_, batchId))
     // the SHARED audit projection — batch and stream cannot drift
     graft.packs.PipelineOps.multimodalVerdict(
       batch.select(col(idCol), col(langCol).as("lang")),
@@ -805,20 +800,10 @@ object StreamingPipelines {
   def annIngestBatch(store: graft.operators.IvfStore,
       centroids: Seq[Seq[Double]], batch: DataFrame,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val assigned = graft.operators.IvfIndex.index(batch, centroids)
-    // on an at-least-once replay the merge would no-op — return the
-    // LAZY assignment (the sink re-emits once) instead of paying the
-    // full assignment + eager-checkpoint materialization for nothing
-    if (store.isReplay(batchId)) return assigned
-    // eager checkpoint: the store merge is an action over the assigned
-    // lineage and the caller's sink write would re-run the assignment
-    // (and a file source's batch read) a second time — materialize once
-    val checkpointed = assigned.seamCheckpoint()
-    store.merge(checkpointed, batchId)
-    store.compactIfNeeded(batch.sparkSession, maxSegments)
-    checkpointed
-  }
+      maxSegments: Int = DefaultSegmentBudget): DataFrame =
+    ingestStep(store, batchId,
+      graft.operators.IvfIndex.index(batch, centroids), maxSegments)(
+      store.merge(_, batchId))
 
   /** SemDeDup at ingest over the SAME inverted file [[annIngestBatch]]
     * maintains and ANN serving probes — the semantic twin of
@@ -845,27 +830,13 @@ object StreamingPipelines {
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
     import graft.operators.{IvfIndex, SimilaritySearch}
-    val spark = batch.sparkSession
-    require(batch.schema("vec_id").dataType ==
-      org.apache.spark.sql.types.LongType,
-      s"semanticDedupIngestBatch requires LONG vec ids (the IvfStore " +
-        s"schema), got ${batch.schema("vec_id").dataType.catalogString} " +
-        "— map ids to a surrogate long (e.g. xxhash64) first")
-    val seenView = store.table(spark).join(
-      broadcast(batch.select(col("vec_id"))), Seq("vec_id"), "left_anti")
+    requireLongIds("semanticDedupIngestBatch", store, batch, "vec_id", "vec")
     val pairs = SimilaritySearch.incrementalSemanticNearDupPairsFromStore(
-      batch, seenView, centroids, threshold, maxCellSize)
-    val survivors = dropSurvivors(batch, pairs, "vec_id", "vec_a", "vec_b")
-    // on a replay the merge below would no-op — return the LAZY
-    // survivors (the sink re-emits once) instead of re-materializing
-    if (store.isReplay(batchId)) return survivors
-    // eager checkpoint: the store merge is an action over the
-    // survivors' lineage (the whole probe pipeline), and the caller's
-    // sink write would re-execute it — materialize once
-    val checkpointed = survivors.seamCheckpoint()
-    store.merge(IvfIndex.index(checkpointed, centroids), batchId)
-    store.compactIfNeeded(spark, maxSegments)
-    checkpointed
+      batch, seenView(store, batch, "vec_id", "vec_id"), centroids,
+      threshold, maxCellSize)
+    ingestStep(store, batchId,
+      dropSurvivors(batch, pairs, "vec_id", "vec_a", "vec_b"), maxSegments)(
+      s => store.merge(IvfIndex.index(s, centroids), batchId))
   }
 
   /** Compressed-index maintenance: encode the batch under frozen
@@ -878,15 +849,10 @@ object StreamingPipelines {
       centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
       batch: DataFrame,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val encoded = graft.operators.IvfPq.encode(batch, centroids, codebooks)
-    // replay: the merge would no-op — return the LAZY encoding
-    if (store.isReplay(batchId)) return encoded
-    val checkpointed = encoded.seamCheckpoint()
-    store.merge(checkpointed, batchId)
-    store.compactIfNeeded(batch.sparkSession, maxSegments)
-    checkpointed
-  }
+      maxSegments: Int = DefaultSegmentBudget): DataFrame =
+    ingestStep(store, batchId,
+      graft.operators.IvfPq.encode(batch, centroids, codebooks), maxSegments)(
+      store.merge(_, batchId))
 
   /** The full incremental near-dup INGEST loop over the persisted
     * embedding store — the VECTOR twin of [[nearDupIngestBatch]], as a
@@ -899,7 +865,7 @@ object StreamingPipelines {
     * of the accepted corpus, and the later id of each batch-internal
     * pair — unconditionally, so drops chain, (3) ingest the SURVIVORS
     * (one batchId guards BOTH store tables; a replay neither re-drops
-    * nor double-merges, and skips the eager checkpoint entirely).
+    * nor double-merges, and skips the checkpoint entirely).
     * Returns the surviving rows. Only canonical (surviving) vectors
     * enter the store — a later near-dup of a dropped vector still
     * pairs against its surviving canonical, whose embedding is
@@ -910,43 +876,26 @@ object StreamingPipelines {
         graft.operators.SimilaritySearch.EmbLshMaxBucketSize,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    // same contract as EmbStore, enforced before the probe is even
-    // built — a wrong-typed id would otherwise pay the whole probe and
-    // fail late inside ingest with a message about the DERIVED bucket
-    // batch, not the caller's input
-    require(batch.schema("vec_id").dataType ==
-      org.apache.spark.sql.types.LongType,
-      s"embNearDupIngestBatch requires LONG vec ids (the EmbStore " +
-        s"schema), got ${batch.schema("vec_id").dataType.catalogString} " +
-        "— map ids to a surrogate long (e.g. xxhash64) first")
+    requireLongIds("embNearDupIngestBatch", store, batch, "vec_id", "vec")
     val pairs = store.probe(batch, threshold, maxBucketSize,
       excludeBatchIds = true)
-    val survivors = dropSurvivors(batch, pairs, "vec_id", "vec_a", "vec_b")
-    // on a replay the ingest below would no-op — return the LAZY
-    // survivors (the sink re-emits once) instead of re-materializing
-    if (store.isReplay(batchId)) return survivors
-    // eager checkpoint: the store ingest is an action over the
-    // survivors' lineage (the whole probe pipeline), and the caller's
-    // sink write would re-execute it — materialize once
-    val checkpointed = survivors.seamCheckpoint()
-    store.ingest(checkpointed, batchId)
-    store.compactIfNeeded(batch.sparkSession, maxSegments)
-    checkpointed
+    ingestStep(store, batchId,
+      dropSurvivors(batch, pairs, "vec_id", "vec_a", "vec_b"), maxSegments)(
+      store.ingest(_, batchId))
   }
 
-  /** Chunk → hash-embed projection shared by the TEXT near-dup ingest
-    * loop's probe and ingest sides (one definition, the two can't
-    * drift): vec_id = doc_id * vecBase + chunk_idx (the
-    * [[graft.packs.TextOps.ChunkVecBase]] arithmetic). Scan-side
-    * throughout — no shuffle, no UDF. */
-  /** Chunk + embed with the doc id riding along (`__doc`) so one
-    * materialization serves BOTH the probe and the survivor-filtered
-    * ingest. The id range is guarded scan-side: vec_id = id·vecBase +
-    * chunk is only injective-and-roll-up-exact for 0 ≤ id <
-    * Long.MaxValue / vecBase — an xxhash64 surrogate id (negative for
-    * half its range, magnitude ~9e18) would silently overflow and
-    * attribute chunk pairs to the WRONG documents, so it fails loudly
-    * here instead (re-key with a nonnegative bounded surrogate). */
+  /** Chunk → hash-embed projection of the TEXT near-dup ingest loop,
+    * with the doc id riding along (`__doc`) so one materialization
+    * serves BOTH the probe and the survivor-filtered ingest: vec_id =
+    * doc_id * vecBase + chunk_idx (the
+    * [[graft.packs.TextOps.ChunkVecBase]] arithmetic), scan-side
+    * throughout — no shuffle, no UDF. The id range is guarded
+    * scan-side: vec_id = id·vecBase + chunk is only
+    * injective-and-roll-up-exact for 0 ≤ id < Long.MaxValue / vecBase
+    * — an xxhash64 surrogate id (negative for half its range,
+    * magnitude ~9e18) would silently overflow and attribute chunk
+    * pairs to the WRONG documents, so it fails loudly here instead
+    * (re-key with a nonnegative bounded surrogate). */
   private def textChunkVectors(docs: DataFrame, idCol: String,
       textCol: String, chunkTokens: Int, chunkOverlap: Int, vecBase: Long,
       embedDim: Int): DataFrame = {
@@ -988,10 +937,7 @@ object StreamingPipelines {
         graft.operators.SimilaritySearch.EmbLshMaxBucketSize,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    require(batch.schema(idCol).dataType ==
-      org.apache.spark.sql.types.LongType,
-      s"textNearDupIngestBatch requires LONG doc ids, got " +
-        batch.schema(idCol).dataType.catalogString)
+    requireLongIds("textNearDupIngestBatch", store, batch, idCol)
     // ONE chunk+embed materialization: the probe and the
     // survivor-filtered ingest both read these blocks — re-deriving
     // the ingest rows from the survivors' text would re-run the
@@ -1005,17 +951,10 @@ object StreamingPipelines {
         expr(s"vec_b div $vecBase").as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
       .distinct()
-    val survivors = dropSurvivors(batch, docPairs, idCol, "doc_a", "doc_b")
-    if (store.isReplay(batchId)) return survivors
-    // eager checkpoint before ingest, same rationale as the vector loop
-    val checkpointed = survivors.seamCheckpoint()
-    store.ingest(
-      vecs.join(broadcast(checkpointed.select(col(idCol).as("__doc"))),
-          Seq("__doc"), "left_semi")
-        .drop("__doc"),
-      batchId)
-    store.compactIfNeeded(batch.sparkSession, maxSegments)
-    checkpointed
+    ingestStep(store, batchId,
+      dropSurvivors(batch, docPairs, idCol, "doc_a", "doc_b"), maxSegments)(
+      s => store.ingest(vecs.join(broadcast(s.select(col(idCol).as("__doc"))),
+        Seq("__doc"), "left_semi").drop("__doc"), batchId))
   }
 
   /** Token-level boilerplate removal at ingest: strip each arriving
@@ -1041,23 +980,12 @@ object StreamingPipelines {
       idCol: String, textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    import graft.operators.Dedup
-    require(batch.schema(idCol).dataType == org.apache.spark.sql.types.LongType,
-      s"spanIngestBatch requires LONG doc ids (the GramStore schema), got " +
-        s"${batch.schema(idCol).dataType.catalogString} — map ids to a " +
-        "surrogate long (e.g. xxhash64) first")
+    requireLongIds("spanIngestBatch", store, batch, idCol)
     val spans = store.probe(batch, idCol, textCol, excludeBatchIds = true)
     // fan = false: probe-sized batch by contract
-    val cleaned0 = Dedup.stripSpans(batch, spans, idCol, textCol, fan = false)
-    // on a replay the merge below no-ops — return the LAZY rewrite
-    if (store.isReplay(batchId)) return cleaned0
-    // eager checkpoint: the store ingest is an action over the batch's
-    // lineage and the caller's sink write would re-run the whole
-    // probe+rewrite — materialize once
-    val cleaned = cleaned0.seamCheckpoint()
-    store.ingest(batch, idCol, textCol, batchId)
-    store.compactIfNeeded(batch.sparkSession, maxSegments)
-    cleaned
+    ingestStep(store, batchId, graft.operators.Dedup.stripSpans(batch, spans,
+      idCol, textCol, fan = false), maxSegments)(
+      _ => store.ingest(batch, idCol, textCol, batchId))
   }
 
   /** Paragraph-dedup scrub at ingest — CCNet stage 1 as a foreachBatch
@@ -1075,21 +1003,10 @@ object StreamingPipelines {
       batch: DataFrame, idCol: String, textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    require(batch.schema(idCol).dataType == org.apache.spark.sql.types.LongType,
-      s"paragraphIngestBatch requires LONG doc ids (the ParagraphStore " +
-        s"schema), got ${batch.schema(idCol).dataType.catalogString} — map " +
-        "ids to a surrogate long (e.g. xxhash64) first")
-    val scrubbed0 = store.scrubProbe(batch, idCol, textCol,
-      excludeBatchIds = true)
-    // on a replay the merge below no-ops — return the LAZY rewrite
-    if (store.isReplay(batchId)) return scrubbed0
-    // eager checkpoint: the store ingest is an action over the batch's
-    // lineage and the caller's sink write would re-run the whole
-    // probe+rewrite — materialize once
-    val scrubbed = scrubbed0.seamCheckpoint()
-    store.ingest(batch, idCol, textCol, batchId)
-    store.compactIfNeeded(batch.sparkSession, maxSegments)
-    scrubbed
+    requireLongIds("paragraphIngestBatch", store, batch, idCol)
+    ingestStep(store, batchId, store.scrubProbe(batch, idCol, textCol,
+      excludeBatchIds = true), maxSegments)(
+      _ => store.ingest(batch, idCol, textCol, batchId))
   }
 
   /** The CCNet chain as a foreachBatch body — the streaming twin of
@@ -1113,15 +1030,23 @@ object StreamingPipelines {
       maxBucketSize: Int = graft.operators.Dedup.NgramMaxBlockSize,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val scrubbed = paragraphIngestBatch(parStore, batch, idCol, textCol,
-        batchId, maxSegments)
+    curateIngestBatch(floorStore, exactStore, bandStore, seenDocs,
+      ccnetScrubbed(parStore, batch, idCol, textCol, langCol, batchId,
+        maxSegments), idCol, textCol, langCol, ratesBp, defaultBp,
+      threshold, maxBucketSize, batchId, maxSegments)
+  }
+
+  /** CCNet stage 1 of both CCNet bodies: the paragraph scrub
+    * ([[paragraphIngestBatch]]) with fully-scrubbed docs (empty clean
+    * text) dropped, as (idCol, langCol, scrubbed text as textCol). */
+  private def ccnetScrubbed(parStore: graft.operators.ParagraphStore,
+      batch: DataFrame, idCol: String, textCol: String, langCol: String,
+      batchId: Long, maxSegments: Int): DataFrame =
+    paragraphIngestBatch(parStore, batch, idCol, textCol, batchId,
+        maxSegments)
       .filter(length(col("clean_text")) > 0)
       .join(batch.select(col(idCol), col(langCol)), idCol)
       .select(col(idCol), col(langCol), col("clean_text").as(textCol))
-    curateIngestBatch(floorStore, exactStore, bandStore, seenDocs,
-      scrubbed, idCol, textCol, langCol, ratesBp, defaultBp,
-      threshold, maxBucketSize, batchId, maxSegments)
-  }
 
   /** CCNet's head/middle/tail bucket split as a foreachBatch body —
     * the streaming twin of
@@ -1143,17 +1068,11 @@ object StreamingPipelines {
       textCol: String, langCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val scrubbed = paragraphIngestBatch(parStore, batch, idCol, textCol,
+    val scored = ccnetScrubbed(parStore, batch, idCol, textCol, langCol,
         batchId, maxSegments)
-      .filter(length(col("clean_text")) > 0)
-      .join(batch.select(col(idCol), col(langCol)), idCol)
-      .select(col(idCol), col(langCol), col("clean_text").as(textCol))
-    val scored = scrubbed
       .select(col(idCol), col(langCol),
         bucketStore.qualityBp(col(textCol)).as("quality_bp"))
-      .seamCheckpoint() // scored once; feeds the merge AND the caller
-    bucketStore.merge(scored, batchId)
-    scored
+    ingestStep(bucketStore, batchId, scored)(bucketStore.merge(_, batchId))
   }
 
   /** The CCNet bucket store: per-LANGUAGE cutoff ladder at the batch
@@ -1225,21 +1144,13 @@ object StreamingPipelines {
     val withBase = rows
       .join(broadcast(store.totalsBefore(spark, batchId)), Seq("shard"), "left")
       .na.fill(0L, Seq("base_docs", "base_toks"))
-    val packed0 = TextAnalysis.packColumns(withBase, idCol, store.budget,
-      col("base_docs"), col("base_toks"))
-    // on a replay the merge below would no-op — return the LAZY rows
-    if (store.isReplay(batchId)) return packed0
-    // eager checkpoint: the totals merge below is an action over the
-    // batch's window lineage and the caller's sink write would re-run
-    // it — materialize once; the contribution then derives from the
-    // OUTPUT (packed rows carry shard + n_tokens), zero recompute
-    val packed = packed0.seamCheckpoint()
-    store.merge(
-      packed.groupBy(col("shard")).agg(
+    // the contribution derives from the checkpointed OUTPUT (packed
+    // rows carry shard + n_tokens), zero recompute
+    ingestStep(store, batchId, TextAnalysis.packColumns(withBase, idCol,
+      store.budget, col("base_docs"), col("base_toks")))(
+      packed => store.merge(packed.groupBy(col("shard")).agg(
         count(lit(1)).cast("long").as("n_docs"),
-        sum(col("n_tokens")).cast("long").as("n_tokens")),
-      batchId)
-    packed
+        sum(col("n_tokens")).cast("long").as("n_tokens")), batchId))
   }
 
   /** Padded-pack ingest — the streaming twin of
@@ -1279,45 +1190,25 @@ object StreamingPipelines {
     val withBase = rows
       .join(broadcast(store.stateBefore(spark, batchId)), Seq("shard"), "left")
       .na.fill(0L, Seq("base_docs", "base_seq", "base_off"))
-    val packed0 = TextAnalysis.paddedPackColumns(withBase, idCol, store.budget)
-    // on a replay the merge below would no-op — return the LAZY rows
-    if (store.isReplay(batchId)) return packed0.drop("next_seq", "next_off")
-    // eager checkpoint: the state merge is an action over the batch's
-    // window+fold lineage and the caller's sink write would re-run it —
-    // materialize once; the resume state then derives from the OUTPUT
-    val packed = packed0.seamCheckpoint()
-    // the fold already emitted its own state after every row
-    // (next_seq/next_off) — persisting it is a per-shard last-row
-    // SELECTION, never a re-spelling of the recurrence
-    val last = packed.groupBy(col("shard")).agg(
-      max(struct(col("pos"), col("next_seq"), col("next_off"))).as("l"))
-    store.merge(
-      last.select(col("shard"), col("l.pos").as("n_docs"),
+    // the resume state derives from the checkpointed OUTPUT: the fold
+    // already emitted its own state after every row (next_seq/next_off)
+    // — persisting it is a per-shard last-row SELECTION, never a
+    // re-spelling of the recurrence
+    ingestStep(store, batchId,
+      TextAnalysis.paddedPackColumns(withBase, idCol, store.budget)) { packed =>
+      val last = packed.groupBy(col("shard")).agg(
+        max(struct(col("pos"), col("next_seq"), col("next_off"))).as("l"))
+      store.merge(last.select(col("shard"), col("l.pos").as("n_docs"),
         col("l.next_seq").as("next_seq"), col("l.next_off").as("next_off")),
-      batchId)
-    packed.drop("next_seq", "next_off")
+        batchId)
+    }.drop("next_seq", "next_off")
   }
 
-  /** Streaming curation with a CORPUS-RELATIVE quality floor — the
-    * composition [[curateStream]] can't express with its fixed
-    * `qualityMin`: keep the top keepFrac of the WHOLE corpus seen so
-    * far by quality. Call inside foreachBatch; it (a) merges the
-    * batch's quality histogram into `store` (value-domain-bounded
-    * state, published cutoff) and (b) returns the batch's rows scored
-    * and mixture-gated, for the caller to append to its doc sink. The
-    * floor itself applies at READ time — `store.curated(sink)` — so
-    * the curated view is retroactively corpus-relative on any
-    * finalized horizon, exactly matching the batch composition
-    * qualityFloor ∘ stratifiedSample (CurateRelativeSpec pins it).
-    * The stateless mixture gate stays emit-time (a pure function of
-    * the row, same expression as batch); only the corpus-relative
-    * verdict is deferred — that split is the point: global statistics
-    * belong to the store, per-row gates to the stream. */
   /** foreachBatch body for MEDIA dedup-at-ingest — the multimodal twin
     * of [[embNearDupIngestBatch]] over a [[graft.operators.MediaHashStore]]:
     * (1) decode+hash the arriving assets ONCE (the expensive codec
-    * step — eagerly checkpointed so the probe, drop and merge all read
-    * the one materialization), (2) probe against the persisted banded
+    * step — checkpointed so the probe, drop and merge all read the
+    * one materialization), (2) probe against the persisted banded
     * fingerprint corpus with the batch's own ids excluded
     * (replay-exact), (3) drop every batch asset hamming-near a seen
     * asset, and the later id of each batch-internal pair (the shared
@@ -1329,16 +1220,11 @@ object StreamingPipelines {
       batchHashes: DataFrame,
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val hashes =
-      if (store.isReplay(batchId)) batchHashes.seamCheckpoint(false)
-      else batchHashes.seamCheckpoint()
+    val hashes = batchHashes.seamCheckpoint()
     val pairs = store.probe(hashes, excludeBatchIds = true)
-    val survivors = dropSurvivors(hashes, pairs, "asset_id",
-      "asset_a", "asset_b")
-    if (store.isReplay(batchId)) return survivors
-    store.ingest(survivors, batchId)
-    store.compactIfNeeded(batchHashes.sparkSession, maxSegments)
-    survivors
+    ingestStep(store, batchId,
+      dropSurvivors(hashes, pairs, "asset_id", "asset_a", "asset_b"),
+      maxSegments, checkpoint = false)(store.ingest(_, batchId))
   }
 
   /** foreachBatch body maintaining the DSIR importance model at ingest
@@ -1358,13 +1244,9 @@ object StreamingPipelines {
       idCol: String, textCol: String,
       isTarget: org.apache.spark.sql.Column,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    if (!store.isReplay(batchId)) {
-      store.ingest(batch, idCol, textCol, isTarget, batchId)
-      store.compactIfNeeded(batch.sparkSession, maxSegments)
-    }
-    batch
-  }
+      maxSegments: Int = DefaultSegmentBudget): DataFrame =
+    ingestStep(store, batchId, batch, maxSegments, checkpoint = false)(
+      store.ingest(_, idCol, textCol, isTarget, batchId))
 
   /** BPE tokenizer-model maintenance per micro-batch — the DSIR loop's
     * shape over the OTHER additive trained artifact: each batch's
@@ -1380,38 +1262,35 @@ object StreamingPipelines {
   def bpeIngestBatch(store: graft.operators.BpeStore, batch: DataFrame,
       textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    if (!store.isReplay(batchId)) {
-      store.ingest(batch, textCol, batchId)
-      store.compactIfNeeded(batch.sparkSession, maxSegments)
-    }
-    batch
-  }
+      maxSegments: Int = DefaultSegmentBudget): DataFrame =
+    ingestStep(store, batchId, batch, maxSegments, checkpoint = false)(
+      store.ingest(_, textCol, batchId))
 
+  /** Streaming curation with a CORPUS-RELATIVE quality floor — the
+    * composition [[curateStream]] can't express with its fixed
+    * `qualityMin`: keep the top keepFrac of the WHOLE corpus seen so
+    * far by quality. Call inside foreachBatch; it (a) merges the
+    * batch's quality histogram into `store` (value-domain-bounded
+    * state, published cutoff) and (b) returns the batch's rows scored
+    * and mixture-gated, for the caller to append to its doc sink. The
+    * floor itself applies at READ time — `store.curated(sink)` — so
+    * the curated view is retroactively corpus-relative on any
+    * finalized horizon, exactly matching the batch composition
+    * qualityFloor ∘ stratifiedSample (CurateRelativeSpec pins it).
+    * The stateless mixture gate stays emit-time (a pure function of
+    * the row, same expression as batch); only the corpus-relative
+    * verdict is deferred — that split is the point: global statistics
+    * belong to the store, per-row gates to the stream. The histogram
+    * sees EVERY doc (the floor is corpus-relative over the full
+    * stream, as the batch form is over the full table); the mixture
+    * gate thins what the sink keeps. */
   def curateRelativeBatch(store: QualityFloorStore, batch: DataFrame,
       idCol: String, textCol: String, langCol: String,
       ratesBp: Map[String, Int], defaultBp: Int,
-      batchId: Long = VersionedParquetStore.NoBatchId): DataFrame = {
-    import graft.operators.TextAnalysis
-    val scored0 = batch.withColumn("quality_bp", store.qualityBp(col(textCol)))
-    // on a replay the histogram merge below would no-op — return the
-    // LAZY scored sample (the sink re-emits once) instead of paying the
-    // regex-heavy scoring checkpoint for nothing
-    if (store.isReplay(batchId))
-      return TextAnalysis.stratifiedSample(scored0, langCol, idCol,
-        ratesBp, defaultBp)
-    // eager checkpoint: the histogram merge below is an ACTION and the
-    // returned rows get materialized again by the caller's sink write —
-    // without it the regex-heavy quality scoring (and a file source's
-    // batch read) would run twice per batch
-    val scored = scored0.seamCheckpoint()
-    // the histogram sees EVERY doc (the floor is corpus-relative over
-    // the full stream, as the batch form is over the full table);
-    // the mixture gate thins what the sink keeps. batchId makes an
-    // at-least-once replay a no-op on the histogram.
-    store.merge(scored.select(col("quality_bp")), batchId)
-    TextAnalysis.stratifiedSample(scored, langCol, idCol, ratesBp, defaultBp)
-  }
+      batchId: Long = VersionedParquetStore.NoBatchId): DataFrame =
+    curateRelative(store, store.qualityBp, batch, idCol, textCol, langCol,
+      ratesBp, defaultBp, batchId)(
+      scored => store.merge(scored.select(col("quality_bp")), batchId))
 
   /** Grouped (per-language) twin of [[curateRelativeBatch]]: the
     * histogram merge carries (group, quality_bp) mass into a
@@ -1419,27 +1298,32 @@ object StreamingPipelines {
     * language's OWN corpus-relative floor — a multilingual stream
     * where a single global floor would starve the lower-scoring
     * languages keeps every language's top fraction instead. The
-    * mixture gate still thins emit-time; same replay no-op and eager
-    * checkpoint discipline as the global form (the scoring regex pass
-    * runs once per batch, never per consumer). */
+    * mixture gate still thins emit-time; same replay and checkpoint
+    * discipline as the global form (the scoring regex pass runs once
+    * per batch, never per consumer). */
   def curateRelativeByGroupBatch(store: GroupedQualityFloorStore,
       batch: DataFrame, idCol: String, textCol: String, langCol: String,
       ratesBp: Map[String, Int], defaultBp: Int,
-      batchId: Long = VersionedParquetStore.NoBatchId): DataFrame = {
-    import graft.operators.TextAnalysis
-    val scored0 = batch.withColumn("quality_bp", store.qualityBp(col(textCol)))
-    if (store.isReplay(batchId))
-      return TextAnalysis.stratifiedSample(scored0, langCol, idCol,
-        ratesBp, defaultBp)
-    val scored = scored0.seamCheckpoint()
-    // every doc's mass reaches ITS group's histogram (the floor is
-    // corpus-relative per group over the full stream); batchId makes
-    // an at-least-once replay a no-op
-    store.merge(
-      scored.select(col(langCol).as(store.groupCol), col("quality_bp")),
-      batchId)
-    TextAnalysis.stratifiedSample(scored, langCol, idCol, ratesBp, defaultBp)
-  }
+      batchId: Long = VersionedParquetStore.NoBatchId): DataFrame =
+    curateRelative(store, store.qualityBp, batch, idCol, textCol, langCol,
+      ratesBp, defaultBp, batchId)(scored => store.merge(
+        scored.select(col(langCol).as(store.groupCol), col("quality_bp")),
+        batchId))
+
+  /** The shared body of both corpus-relative curate loops: score, merge
+    * the batch's histogram mass (`merge`) through the ingest step — the
+    * regex-heavy scoring is checkpointed once for the merge AND the
+    * sink, and skipped entirely on a replay — then the emit-time
+    * mixture gate. */
+  private def curateRelative(store: ReplayGuarded,
+      qualityBp: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+      batch: DataFrame, idCol: String, textCol: String, langCol: String,
+      ratesBp: Map[String, Int], defaultBp: Int, batchId: Long)(
+      merge: DataFrame => Unit): DataFrame =
+    graft.operators.TextAnalysis.stratifiedSample(
+      ingestStep(store, batchId,
+        batch.withColumn("quality_bp", qualityBp(col(textCol))))(merge),
+      langCol, idCol, ratesBp, defaultBp)
 
   /** Online-classifier ingest — the streaming twin of the
     * `classifier_score_store` ladder ([[graft.operators.NbStore]]):
@@ -1470,12 +1354,8 @@ object StreamingPipelines {
   def classifierIngestBatch(store: graft.operators.NbStore,
       batch: DataFrame, idCol: String, textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId): DataFrame = {
-    // checkpoint once: the ingest's count aggregation AND the caller's
-    // sink write both materialize the batch — without this a file
-    // source's batch is re-read and the regex-heavy labeling runs
-    // twice (the curateRelativeBatch discipline)
-    val b = batch.seamCheckpoint()
-    store.ingest(b, idCol, textCol, batchId)
+    val b = ingestStep(store, batchId, batch)(
+      store.ingest(_, idCol, textCol, batchId))
     val m = store.model(b.sparkSession)
     // feature space rides the store (rawScoreExprOf): a bigram-trained
     // store scores with the bigram walker, same loop otherwise
@@ -1484,18 +1364,6 @@ object StreamingPipelines {
       (store.rawScoreExprOf(col(textCol), m) > 0).as("keep"))
   }
 
-  /** [[curateIngestBatch]] with the TRAINED-classifier admission gate
-    * in FRONT — the batch pipeline_curate_classifier ordering as a
-    * stream: the batch first teaches the online model (count merge
-    * under the replay guard — EVERY doc counts toward the statistics,
-    * admitted or not, the same every-doc-counts reasoning as the
-    * quality histogram), then only positive-log-odds docs proceed into
-    * the histogram/mixture/dedup stack. Update-then-gate keeps replays
-    * exact: a re-delivered batch's merge no-ops, so it re-filters
-    * under the identical model and the downstream stores see the
-    * identical survivor set. The gate is a scan-side filter (the
-    * post-merge model rides along as one dim-long array) — no join
-    * against the scored rows. */
   /** The MASTER chain as a foreachBatch body — the streaming twin of
     * [[graft.packs.PipelineOps.pipelineCurateMaster]]'s stage order:
     * online-classifier admission gate FIRST (update-then-gate, the
@@ -1520,16 +1388,24 @@ object StreamingPipelines {
       threshold: Double = graft.operators.Dedup.NgramThreshold,
       maxBucketSize: Int = graft.operators.Dedup.NgramMaxBlockSize,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val b = batch.seamCheckpoint() // one read: ingest + gate + chain
-    nbStore.ingest(b, idCol, textCol, batchId)
-    val m = nbStore.model(b.sparkSession)
-    ccnetIngestBatch(parStore, floorStore, exactStore, bandStore,
-      seenDocs, b.filter(nbStore.rawScoreExprOf(col(textCol), m) > 0),
+      maxSegments: Int = DefaultSegmentBudget): DataFrame =
+    ccnetIngestBatch(parStore, floorStore, exactStore, bandStore, seenDocs,
+      nbAdmitted(nbStore, batch, idCol, textCol, batchId, maxSegments),
       idCol, textCol, langCol, ratesBp, defaultBp,
       threshold, maxBucketSize, batchId, maxSegments)
-  }
 
+  /** [[curateIngestBatch]] with the TRAINED-classifier admission gate
+    * in FRONT — the batch pipeline_curate_classifier ordering as a
+    * stream: the batch first teaches the online model (count merge
+    * under the replay guard — EVERY doc counts toward the statistics,
+    * admitted or not, the same every-doc-counts reasoning as the
+    * quality histogram), then only positive-log-odds docs proceed into
+    * the histogram/mixture/dedup stack. Update-then-gate keeps replays
+    * exact: a re-delivered batch's merge no-ops, so it re-filters
+    * under the identical model and the downstream stores see the
+    * identical survivor set. The gate is a scan-side filter (the
+    * post-merge model rides along as one dim-long array) — no join
+    * against the scored rows. */
   def curateClassifierIngestBatch(nbStore: graft.operators.NbStore,
       floorStore: QualityFloorStore,
       exactStore: graft.operators.BloomStore,
@@ -1539,16 +1415,25 @@ object StreamingPipelines {
       threshold: Double = graft.operators.Dedup.NgramThreshold,
       maxBucketSize: Int = graft.operators.Dedup.NgramMaxBlockSize,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
-    val b = batch.seamCheckpoint() // same double-read argument as above
-    nbStore.ingest(b, idCol, textCol, batchId)
-    val m = nbStore.model(b.sparkSession)
-    // the admission gate inherits the store's feature space: a
-    // bigram NbStore makes this the fastText-features-gated curate
-    // loop with zero other changes (VERDICT r12 item 7)
+      maxSegments: Int = DefaultSegmentBudget): DataFrame =
     curateIngestBatch(floorStore, exactStore, bandStore, seenDocs,
-      b.filter(nbStore.rawScoreExprOf(col(textCol), m) > 0),
+      nbAdmitted(nbStore, batch, idCol, textCol, batchId, maxSegments),
       idCol, textCol, langCol, ratesBp, defaultBp,
       threshold, maxBucketSize, batchId, maxSegments)
+
+  /** The update-then-gate prologue of both classifier-gated chains:
+    * the batch teaches the online model through the ingest step (one
+    * checkpointed read feeds the count merge, the gate and the chain),
+    * then only its positive-log-odds docs pass, under the post-merge
+    * model. The gate inherits the store's feature space: a bigram
+    * NbStore makes the chain the fastText-features-gated curate loop
+    * with zero other changes. */
+  private def nbAdmitted(nbStore: graft.operators.NbStore, batch: DataFrame,
+      idCol: String, textCol: String, batchId: Long,
+      maxSegments: Int): DataFrame = {
+    val b = ingestStep(nbStore, batchId, batch, maxSegments)(
+      nbStore.ingest(_, idCol, textCol, batchId))
+    b.filter(nbStore.rawScoreExprOf(col(textCol),
+      nbStore.model(b.sparkSession)) > 0)
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.operators.Materialize.MatOps
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -72,15 +70,10 @@ object ThreadStreams {
     // re-fix the column order: the gate's USING join moves thread_key
     // to column 0, and a positional consumer (tuple encoder, union)
     // of the survivors would silently read the wrong fields
-    val survivors0 = StreamingPipelines.exactGateBatch(exactStore,
+    val survivors = StreamingPipelines.exactGateBatch(exactStore,
         seenThreads, batch, "thread_key", "thread")
       .select(batch.columns.map(col): _*)
-    if (exactStore.isReplay(batchId)) return survivors0
-    val survivors = survivors0.seamCheckpoint()
-    exactStore.merge(
-      survivors.select(md5(col("thread")).as("thread_hash"))
-        .filter(col("thread_hash").isNotNull),
-      "thread_hash", batchId)
-    survivors
+    StreamingPipelines.ingestStep(exactStore, batchId, survivors)(
+      StreamingPipelines.mergeTextHashes(exactStore, _, "thread", batchId))
   }
 }

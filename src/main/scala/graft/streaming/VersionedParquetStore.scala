@@ -20,8 +20,7 @@ import java.nio.file.{Files, Paths}
   * all silently corrupt otherwise). Pass [[VersionedParquetStore.NoBatchId]]
   * for non-streaming callers that manage their own dedup.
   */
-private[graft] final class VersionedParquetStore(dir: String,
-    adoptExisting: Boolean = false) {
+private[graft] final class VersionedParquetStore(dir: String) {
 
   import VersionedParquetStore.MetaFile
 
@@ -30,33 +29,30 @@ private[graft] final class VersionedParquetStore(dir: String,
 
   private def versionDir(v: Int): String = s"$dir/v$v"
 
-  // Restart adoption (opt-in): a persisted artifact is only worth its
-  // disk if a new JVM can resume it. A version dir COMMITS when its
-  // meta file lands (written last in publish) — a crash mid-write
-  // leaves an uncommitted dir adoption ignores and the next publish
-  // overwrites. The meta file also carries the last applied batch id,
-  // so the replay guard survives the restart (without it, a
-  // checkpoint-replayed batch would double-merge into the adopted
-  // content — exactly the corruption the guard exists to stop).
-  if (adoptExisting) {
-    val root = Paths.get(dir)
-    if (Files.isDirectory(root)) {
-      import scala.jdk.CollectionConverters._
-      val listing = Files.list(root)
-      val committed =
-        try listing.iterator().asScala
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.matches("v\\d+") &&
-            Files.exists(p.resolve(MetaFile)))
-          .map(_.getFileName.toString.drop(1).toInt)
-          .toSeq
-        finally listing.close()
-      if (committed.nonEmpty) {
-        version = committed.max
-        lastBatch = new String(
-          Files.readAllBytes(Paths.get(versionDir(version), MetaFile)),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      }
+  // Restart adoption: a persisted artifact is only worth its disk if
+  // a new JVM can resume it. A version dir COMMITS when its meta file
+  // lands (written last in publish) — a crash mid-write leaves an
+  // uncommitted dir adoption ignores and the next publish overwrites.
+  // The meta file also carries the last applied batch id, so the
+  // replay guard survives the restart (without it, a checkpoint-replayed
+  // batch would double-merge into the adopted content — exactly the
+  // corruption the guard exists to stop).
+  if (Files.isDirectory(Paths.get(dir))) {
+    import scala.jdk.CollectionConverters._
+    val listing = Files.list(Paths.get(dir))
+    val committed =
+      try listing.iterator().asScala
+        .filter(p => Files.isDirectory(p) &&
+          p.getFileName.toString.matches("v\\d+") &&
+          Files.exists(p.resolve(MetaFile)))
+        .map(_.getFileName.toString.drop(1).toInt)
+        .toSeq
+      finally listing.close()
+    if (committed.nonEmpty) {
+      version = committed.max
+      lastBatch = new String(
+        Files.readAllBytes(Paths.get(versionDir(version), MetaFile)),
+        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
     }
   }
 
@@ -116,4 +112,20 @@ private[graft] object VersionedParquetStore {
   /** Per-version commit marker + persisted replay guard (last applied
     * batch id). Underscore-prefixed: parquet readers skip it. */
   val MetaFile: String = "_last_batch"
+}
+
+/** A store whose merges are keyed by foreachBatch id: the replay guard
+  * [[StreamingPipelines]]' ingest step checks before it computes,
+  * checkpoints or publishes anything. */
+private[graft] trait ReplayGuarded {
+  /** True when `batchId` was already applied — a merge would no-op. */
+  def isReplay(batchId: Long): Boolean
+}
+
+/** A [[ReplayGuarded]] store that appends one segment per merge and
+  * folds them once more than `maxSegments` are live — the ingest step
+  * compacts through this after every publish. */
+private[graft] trait Segmented extends ReplayGuarded {
+  def compactIfNeeded(spark: org.apache.spark.sql.SparkSession,
+      maxSegments: Int): Unit
 }
