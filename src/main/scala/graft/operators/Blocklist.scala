@@ -102,10 +102,10 @@ object Blocklist {
       else dictRaw)
     val textNorm = if (foldCase) lower(col(textCol)) else col(textCol)
     // fan the (id, text) rows out to cluster parallelism before the
-    // per-k gram enumeration (scale-guarded — see FanOut): on a
+    // per-k gram enumeration (scale-guarded — see ScalePolicy): on a
     // narrow input the k-gram transform/slice/join work would
     // otherwise run single-task in the scan stage
-    val toks = FanOut.fanOut(
+    val toks = ScalePolicy.fanOut(
         docs.select(checkedLongId(docs, idCol), textNorm.as("__bl_text")),
         col("doc_id"))
       .select(col("doc_id"), TextAnalysis.tokens(col("__bl_text")).as("t"))

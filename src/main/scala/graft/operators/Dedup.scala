@@ -235,7 +235,7 @@ object Dedup {
   def spanGrams(docs: DataFrame, idCol: String, textCol: String,
       k: Int = DupSpanTokens, fan: Boolean = true): DataFrame = {
     // Fan the (id, text) rows out to cluster parallelism before the
-    // gram explode + per-gram digests (scale-guarded — see FanOut):
+    // gram explode + per-gram digests (scale-guarded — see ScalePolicy):
     // a narrow input would hash every gram single-task, and every
     // consumer that next groups or windows by the id (winnow
     // selection, per-doc type dedup) reuses this exchange.
@@ -246,7 +246,7 @@ object Dedup {
     // at sf0.1); a caller with a corpus-sized batch fans it out ONCE
     // at the ingest seam instead of per probe.
     val base = docs.select(col(idCol), col(textCol))
-    (if (fan) FanOut.fanOut(base, col(idCol)) else base)
+    (if (fan) ScalePolicy.fanOut(base, col(idCol)) else base)
       .select(col(idCol), posexplode(shinglesFromText(col(textCol), k)))
       .select(col(idCol), col("pos"), md5(col("col")).as("gram"))
   }
@@ -376,9 +376,9 @@ object Dedup {
     // exchange serves the whole tail. fan = false for probe-sized
     // batches (the r17 probe-side lesson: a forced exchange costs more
     // than the single-task work it parallelizes); corpus-scale inputs
-    // skip it via the FanOut guard.
+    // skip it via the ScalePolicy guard.
     val base = if (fan)
-      FanOut.fanOut(docs.select(col(idCol), col(textCol)), col(idCol))
+      ScalePolicy.fanOut(docs.select(col(idCol), col(textCol)), col(idCol))
     else docs
     val toks = base
       .select(col(idCol), posexplode(tokens(col(textCol))))
@@ -727,21 +727,15 @@ object Dedup {
     * single-task job of every LSH-backed query at sf0.1. Projecting
     * to (id, text) first keeps the exchange narrow (guide §2.3);
     * shingles, digests and minima all run post-exchange at cluster
-    * parallelism. [[FanOut.fanOut]] skips the shuffle entirely when
+    * parallelism. [[ScalePolicy.fanOut]] skips the shuffle entirely when
     * the input is already at least default-parallelism partitioned
     * (the 100 TB case). */
   private[operators] def withShOf(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int): DataFrame = {
     val projected =
       docs.select(col(idCol).as("doc_id"), col(textCol).as("__sh_text"))
-    val par = projected.sparkSession.sparkContext.defaultParallelism
-    // split predicates (r17-ADVICE item 2): the EXCHANGE honors the
-    // graft.nofanout kill switch; the MATERIALIZATION below does not —
-    // a nofanout A/B isolates the fan-out effect only
-    val small = FanOut.isNarrowMaterialize(projected) // memoized — see FanOut
-    val fan = small && FanOut.isNarrow(projected)
-    val base = if (fan) projected.repartition(par, col("doc_id")) else projected
-    val sh = base
+    val small = ScalePolicy.narrow(projected)
+    val sh = ScalePolicy.fanOut(projected, col("doc_id"))
       .select(col("doc_id"),
         shinglesFromText(col("__sh_text"), shingleN).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -928,9 +922,9 @@ object Dedup {
   private[operators] def md5SimhashFp(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     // fan-out before the per-token digests (scale-guarded, see
-    // FanOut); the vote aggregation below groups by doc_id and reuses
+    // ScalePolicy); the vote aggregation below groups by doc_id and reuses
     // the exchange
-    val tok = FanOut.fanOut(
+    val tok = ScalePolicy.fanOut(
         docs.select(col(idCol).as("doc_id"), col(textCol).as("__t")),
         col("doc_id"))
       .select(col("doc_id"), explode(tokens(col("__t"))).as("tok"))
@@ -1246,14 +1240,10 @@ object Dedup {
     // (Bench/Verify run queries sequentially; the forked test JVM runs
     // suites sequentially), so the scoped toggle cannot leak into a
     // concurrent plan compile.
-    // graft.loopaqe keeps AQE on inside the loop — the same-session
-    // A/B hook (ProfileMany ab:graft.loopaqe), same pattern as
-    // graft.nofanout; never set by Bench/Verify/GraftSession.
     val sparkForConf = edges.sparkSession
     val AqeKey = "spark.sql.adaptive.enabled"
     val aqePrev = sparkForConf.conf.get(AqeKey, "true")
-    if (!sys.props.contains("graft.loopaqe"))
-      sparkForConf.conf.set(AqeKey, "false")
+    sparkForConf.conf.set(AqeKey, "false")
     try {
     // Fused seed (r15): the seed labels (`lbl = v` over distinct `dst`)
     // followed by round 1's propagate-and-min fold algebraically
@@ -1341,13 +1331,7 @@ object Dedup {
           jumped.sparkSession.createDataFrame(jumped.rdd, jumped.schema)
             .seamCheckpoint(eager = false)
         }
-      val t0 = System.nanoTime()
       val nextSum = labelSum(next)
-      if (sys.props.contains("graft.debug.components"))
-        System.err.println(f"[nearDupClusters] round ${it + 1} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s sum=$nextSum " +
-          f"planNodes=${next.queryExecution.logical.collect { case n => n }.size} " +
-          f"edgesNodes=${edges.queryExecution.logical.collect { case n => n }.size}")
       labels.unpersist()
       if (next ne merged) merged.unpersist()
       labels = next
@@ -1359,8 +1343,6 @@ object Dedup {
       System.err.println(s"[nearDupClusters] WARNING: not converged after " +
         s"$maxIters rounds — a >$maxIters-hop similarity chain exists; " +
         "clusters may be split (never merged). Raise maxIters.")
-    if (sys.props.contains("graft.debug.components"))
-      System.err.println(s"[nearDupClusters] converged=$converged rounds=$it")
     labels
     } finally sparkForConf.conf.set(AqeKey, aqePrev)
   }

@@ -428,8 +428,8 @@ object Multimodal {
     // Codec work (PNG encode here, the decode in every consumer's
     // mapPartitions seam) is CPU-bound per asset; a small doc table
     // scans as one partition and would serialize it on one core —
-    // fan out to cluster parallelism first (scale-guarded, see FanOut).
-    FanOut.fanOut(docs.select(col("doc_id")), col("doc_id"))
+    // fan out to cluster parallelism first (scale-guarded, see ScalePolicy).
+    ScalePolicy.fanOut(docs.select(col("doc_id")), col("doc_id"))
       .as[Long].mapPartitions { ids =>
       ids.map { id =>
         val w = (PngWBase + id % PngWMod).toInt
@@ -726,7 +726,7 @@ object Multimodal {
   def syntheticWavAssets(spark: SparkSession, docs: DataFrame): Dataset[MediaAsset] = {
     import spark.implicits._
     // fan out before the codec seam — see syntheticPngAssets
-    FanOut.fanOut(docs.select(col("doc_id")), col("doc_id"))
+    ScalePolicy.fanOut(docs.select(col("doc_id")), col("doc_id"))
       .as[Long].mapPartitions(_.map { id =>
       val n = (AudNBase + id % AudNMod).toInt
       val raw = new Array[Byte](n * 2)
@@ -884,7 +884,7 @@ object Multimodal {
   def syntheticGifAssets(spark: SparkSession, docs: DataFrame): Dataset[MediaAsset] = {
     import spark.implicits._
     // fan out before the codec seam — see syntheticPngAssets
-    FanOut.fanOut(
+    ScalePolicy.fanOut(
         docs.filter(col("doc_id") % 3 === 2).select(col("doc_id")),
         col("doc_id"))
       .as[Long]

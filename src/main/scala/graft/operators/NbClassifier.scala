@@ -92,23 +92,37 @@ object NbClassifier {
     * rows regardless of corpus size, and bucket-wise ADDITIVE over any
     * batch split of the corpus. */
   def stats(docs: DataFrame, idCol: String, textCol: String,
-      dim: Int = Dim): DataFrame = {
-    val labeled = docs
-      .select(col(idCol), col(textCol).as("text"),
+      dim: Int = Dim): DataFrame =
+    statsOf(docs, textCol, dim, bigrams = false)
+
+  /** Each labeled doc explodes its feature buckets plus ONE
+    * [[DocCountBucket]] element, so a single (label, bucket) count
+    * yields the token counts and the per-class doc counts from one pass
+    * over the labeled scan — no union of two aggregations reading the
+    * same input (which computes a lazily checkpointed input twice). */
+  private def statsOf(docs: DataFrame, textCol: String, dim: Int,
+      bigrams: Boolean): DataFrame = {
+    val toks = TextAnalysis.tokens(col("text"))
+    def bucketOf(salt: String, feat: Column) =
+      pmod(Dedup.md5h60(concat(lit(salt), feat)), lit(dim.toLong))
+    val uniBuckets = transform(toks, t => bucketOf("clf#", t))
+    // unigrams then bigrams in the one bucket array — no second pass
+    // over the corpus for the bigrams
+    val buckets =
+      if (!bigrams) uniBuckets
+      else concat(uniBuckets, when(size(toks) >= 2,
+        zip_with(slice(toks, lit(1), size(toks) - 1),
+          slice(toks, lit(2), size(toks) - 1),
+          (a, b) => bucketOf("clf2#", concat(a, lit(" "), b))))
+        .otherwise(array().cast("array<bigint>")))
+    docs
+      .select(col(textCol).as("text"),
         labelExpr(TextAnalysis.qualityExpr(col(textCol))).as("label"))
       .filter(col("label").isNotNull)
-    val tokenCounts = labeled
       .select(col("label"),
-        explode(TextAnalysis.tokens(col("text"))).as("t"))
-      .select(col("label"),
-        pmod(Dedup.md5h60(concat(lit("clf#"), col("t"))),
-          lit(dim.toLong)).as("bucket"))
+        explode(concat(array(lit(DocCountBucket)), buckets)).as("bucket"))
       .groupBy(col("label"), col("bucket"))
       .agg(count(lit(1)).as("c"))
-    val docCounts = labeled.groupBy(col("label"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("label"), lit(DocCountBucket).as("bucket"), col("c"))
-    tokenCounts.unionByName(docCounts)
       .select(col("label").cast("long").as("label"), col("bucket"),
         col("c"))
   }
@@ -163,34 +177,8 @@ object NbClassifier {
     * inference. Same ≤ 2·dim + 2 bound (the bucket domain didn't
     * grow), same scan-side shape, same additivity. */
   def statsBigram(docs: DataFrame, idCol: String, textCol: String,
-      dim: Int = Dim): DataFrame = {
-    val labeled = docs
-      .select(col(idCol), col(textCol).as("text"),
-        labelExpr(TextAnalysis.qualityExpr(col(textCol))).as("label"))
-      .filter(col("label").isNotNull)
-    val toks = TextAnalysis.tokens(col("text"))
-    def bucketOf(salt: String, feat: Column) =
-      pmod(Dedup.md5h60(concat(lit(salt), feat)), lit(dim.toLong))
-    // one combined bucket array per doc (unigrams then bigrams),
-    // exploded once — no second pass over the corpus for the bigrams
-    val uniBuckets = transform(toks, t => bucketOf("clf#", t))
-    val biBuckets = when(size(toks) >= 2,
-      zip_with(slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (a, b) => bucketOf("clf2#", concat(a, lit(" "), b))))
-      .otherwise(array().cast("array<bigint>"))
-    val tokenCounts = labeled
-      .select(col("label"),
-        explode(concat(uniBuckets, biBuckets)).as("bucket"))
-      .groupBy(col("label"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-    val docCounts = labeled.groupBy(col("label"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("label"), lit(DocCountBucket).as("bucket"), col("c"))
-    tokenCounts.unionByName(docCounts)
-      .select(col("label").cast("long").as("label"), col("bucket"),
-        col("c"))
-  }
+      dim: Int = Dim): DataFrame =
+    statsOf(docs, textCol, dim, bigrams = true)
 
   /** One-shot bigram-feature training — [[modelOf]] is feature-space
     * agnostic (pure counts in, weights out). */

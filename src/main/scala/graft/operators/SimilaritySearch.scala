@@ -341,13 +341,11 @@ object SimilaritySearch {
     // r17: `vectors` itself is consumed twice (bucketing + the
     // verification side) and its lineage may be an expensive
     // chunk+embed scan — a SMALL input (below cluster parallelism,
-    // the FanOut guard) additionally materializes it once; a
+    // the ScalePolicy guard) additionally materializes it once; a
     // corpus-scale input skips the copy (there the persisted EmbStore
     // is the serving artifact, and re-scanning beats materializing a
     // corpus-sized vector table).
-    // materialization gate, NOT a fan-out — kill-switch-free predicate
-    // (r17-ADVICE item 2): nofanout A/Bs must not also skip the copy
-    val small = FanOut.isNarrowMaterialize(vectors)
+    val small = ScalePolicy.narrow(vectors)
     val vecs = if (small) vectors.seamCheckpoint(false) else vectors
     // consumed by the bucket count AND both join sides — materialize the
     // narrow (id, tbl, bucket) rows once (lazy localCheckpoint, same

@@ -1321,7 +1321,7 @@ object TextAnalysis {
     // mergeIslandSpans' per-doc window, so the exchange is reused);
     // fan = false for probe-sized batches, skipped at corpus scale
     val base = if (fan)
-      graft.operators.FanOut.fanOut(
+      ScalePolicy.fanOut(
         docs.select(col(idCol), col(textCol)), col(idCol))
     else docs
     val docSh = base
@@ -1522,8 +1522,8 @@ object TextAnalysis {
     // folds them to one partition, single-tasking every downstream
     // sort/merge-join (JobProfile: all of bigram_rank_agreement's
     // slowest stages ran tasks=1). Fan out the narrow (id, text)
-    // projection before the explode (scale-guarded + kill-switch, as
-    // everywhere), and pin the AGGREGATED table's layout to hash(big)
+    // projection before the explode (scale-guarded, as everywhere),
+    // and pin the AGGREGATED table's layout to hash(big)
     // so the corpus-count groupBy and every big-keyed merge join
     // downstream REUSE the exchange instead of AQE re-folding it.
     // At corpus scale both extra exchanges are skipped (input already
@@ -1531,7 +1531,7 @@ object TextAnalysis {
     // and AQE sizes them correctly).
     val projected = bigramProjected(docs, idCol, textCol)
     val par = projected.sparkSession.sparkContext.defaultParallelism
-    val fan = graft.operators.FanOut.isNarrow(projected)
+    val fan = ScalePolicy.narrow(projected)
     val base =
       if (fan) projected.repartition(par, col("doc_id")) else projected
     val agg = base.select(col("doc_id"),
@@ -1543,8 +1543,8 @@ object TextAnalysis {
 
   /** The one (id, text) projection every bigram entry derives from —
     * shared so [[bigramBf]]'s fan-out decision and the callers'
-    * small-input join-strategy decision hit the SAME memoized FanOut
-    * key (plan-canonical equality). */
+    * small-input join-strategy decision hit the SAME memoized
+    * [[ScalePolicy]] key (plan-canonical equality). */
   private[graft] def bigramProjected(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"), col(textCol).as("__bg_text"))
@@ -1557,12 +1557,10 @@ object TextAnalysis {
     * AQE folded the byte-small exchanges (r18, guide §3.1). At corpus
     * scale the hints stay: an open bigram/word vocabulary must never
     * be broadcast, and static size estimates cannot be trusted to
-    * decide that. Kill-switch-free (a materialization/strategy gate,
-    * not a fan-out — r17-ADVICE item 2). */
+    * decide that. */
   private[graft] def bigramSmallDims(docs: DataFrame, idCol: String,
       textCol: String): Boolean =
-    graft.operators.FanOut.isNarrowMaterialize(
-      bigramProjected(docs, idCol, textCol))
+    ScalePolicy.narrow(bigramProjected(docs, idCol, textCol))
 
   def bigramLogProb(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     bigramLogProbWithBf(bigramBf(docs, idCol, textCol),
@@ -2071,7 +2069,7 @@ object TextAnalysis {
     * (which persists only the bucket-level sums). */
   private[graft] def dsirTf(docs: DataFrame, idCol: String,
       textCol: String, isTarget: Column, buckets: Int): DataFrame = {
-    val base = graft.operators.FanOut.fanOut(
+    val base = ScalePolicy.fanOut(
       docs.select(col(idCol).as("doc_id"), isTarget.as("tgt"),
         col(textCol).as("text")),
       col("doc_id"))

@@ -43,7 +43,7 @@ object PipelineOps extends QueryPack {
     val sampledRaw = TextAnalysis.stratifiedSample(filtered, "lang", "doc_id",
       TextOps.SampleRatesBp, TextOps.SampleDefaultBp)
     val sampled =
-      if (graft.operators.FanOut.isNarrowMaterialize(sampledRaw))
+      if (graft.operators.ScalePolicy.narrow(sampledRaw))
         sampledRaw.seamCheckpoint(false)
       else sampledRaw
     // Content-robust pair source: MinHash-LSH (md5 twin, so the whole
@@ -145,7 +145,7 @@ object PipelineOps extends QueryPack {
     val sampledRaw = TextAnalysis.stratifiedSample(filtered, "lang", "doc_id",
       TextOps.SampleRatesBp, TextOps.SampleDefaultBp)
     val sampled =
-      if (graft.operators.FanOut.isNarrowMaterialize(sampledRaw))
+      if (graft.operators.ScalePolicy.narrow(sampledRaw))
         sampledRaw.seamCheckpoint(false)
       else sampledRaw
     val clusters = Dedup.nearDupClustersFromPairs(sampled, "doc_id",

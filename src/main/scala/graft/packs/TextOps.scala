@@ -1948,14 +1948,10 @@ object TextOps extends QueryPack {
     // re-ran the chunk+embed scan. Scale-guarded: a corpus-wide input
     // skips both the exchange and the copy (vectors would be
     // EmbStore-served there).
-    val narrow = graft.operators.FanOut.isNarrowMaterialize(chunks)
-    val spread =
-      if (narrow && graft.operators.FanOut.isNarrow(chunks))
-        chunks.repartition(
-          chunks.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-      else chunks
-    val vectorsRaw = spread.select(col("doc_id"), col("vec_id"),
-      graft.functions.HashEmbed(col("text"), EmbedDim).as("embedding"))
+    val narrow = graft.operators.ScalePolicy.narrow(chunks)
+    val vectorsRaw = graft.operators.ScalePolicy.fanOut(chunks, col("vec_id"))
+      .select(col("doc_id"), col("vec_id"),
+        graft.functions.HashEmbed(col("text"), EmbedDim).as("embedding"))
     val vectors =
       if (narrow) vectorsRaw.seamCheckpoint(false) else vectorsRaw
     val queries = vectors.filter(col("doc_id") % 100 === 0)
@@ -2046,7 +2042,7 @@ object TextOps extends QueryPack {
       .select((col("doc_id") * ChunkVecBase + col("chunk_idx")).as("vec_id"),
         col("text"))
     // fan out before the per-chunk embedding (scale-guarded — see
-    // FanOut): the HashEmbed projection is the expensive per-row work
+    // ScalePolicy): the HashEmbed projection is the expensive per-row work
     // of this query and would otherwise run at the chunk scan's
     // narrow parallelism. On the SAME narrow-input condition the
     // embedded vectors are materialized once (lazy checkpoint): the
@@ -2057,16 +2053,10 @@ object TextOps extends QueryPack {
     // 1.49 → 1.15 s once the embed is materialized). At corpus scale
     // (narrow = false) both the exchange and the copy are skipped —
     // the persisted EmbStore is the serving artifact there.
-    // split predicates (r17-ADVICE item 2): the exchange honors the
-    // graft.nofanout kill switch, the materialization does not
-    val narrow = graft.operators.FanOut.isNarrowMaterialize(chunks)
-    val spread =
-      if (narrow && graft.operators.FanOut.isNarrow(chunks))
-        chunks.repartition(
-          chunks.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-      else chunks
-    val vectorsRaw = spread.select(col("vec_id"),
-      graft.functions.HashEmbed(col("text"), EmbedDim).as("embedding"))
+    val narrow = graft.operators.ScalePolicy.narrow(chunks)
+    val vectorsRaw = graft.operators.ScalePolicy.fanOut(chunks, col("vec_id"))
+      .select(col("vec_id"),
+        graft.functions.HashEmbed(col("text"), EmbedDim).as("embedding"))
     val vectors =
       if (narrow) vectorsRaw.seamCheckpoint(false) else vectorsRaw
     graft.operators.SimilaritySearch

@@ -4,13 +4,16 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.model.ImpressionAndClick
-import graft.streaming.StatefulCounts.{AdCounts, AdCtrUpdate}
+import graft.streaming.AdCountsProcessor.{AdCounts, AdCtrUpdate}
 
-/** The per-ad running counters on Spark 4's `transformWithState` — the
-  * successor API to mapGroupsWithState (typed per-key state handles,
-  * TTL, timers, RocksDB-first design). Same faithful A6/A7 semantics as
-  * StatefulCounts; kept alongside it so the engine exposes both the
-  * stable and the modern arbitrary-state API.
+/** Per-ad running counters as explicit keyed state — the Spark analog of
+  * the reference's A6 aggregate over a KeyValueStore
+  * (StreamStreamJoin.java:105-131) and of the Processor API it imports
+  * but never uses (Aggregations.java:15-20, SURVEY.md §2.8), on Spark 4's
+  * `transformWithState` (typed per-key state handles, TTL, timers,
+  * RocksDB-first design). Each micro-batch emits one updated row per
+  * touched ad — the KTable changelog cadence at micro-batch granularity,
+  * with the faithful A6/A7 semantics, quirks included (SURVEY.md §7.5.4).
   *
   * At scale: ValueState is per-key in the state store (RocksDB provider
   * for large cardinality); TTLConfig would bound state for ad churn —
@@ -42,6 +45,15 @@ class AdCountsProcessor
 }
 
 object AdCountsProcessor {
+
+  final case class AdCounts(numImpressions: Long, numClicks: Long)
+
+  final case class AdCtrUpdate(
+      adId: String,
+      numImpressions: Long,
+      numClicks: Long,
+      ctr: Double)
+
   def runningAdCounts(spark: SparkSession,
       joined: Dataset[ImpressionAndClick]): Dataset[AdCtrUpdate] = {
     import spark.implicits._

@@ -766,10 +766,14 @@ object StreamingPipelines {
       .probe(bh, excludeBatchIds = mediaStore.isReplay(batchId))
       .seamCheckpoint(false)
     val batchIds = bh.select(col("asset_id"))
-    // pair rows oriented around each BATCH asset: (aid, partner)
+    // pair rows oriented around each BATCH asset: (aid, partner), both
+    // orientations from ONE read of the lazy checkpoint (a union of two
+    // reads would compute each of its partitions twice)
     val touching = pairs
-      .select(col("asset_a").as("aid"), col("asset_b").as("partner"))
-      .union(pairs.select(col("asset_b").as("aid"), col("asset_a").as("partner")))
+      .select(explode(array(
+        struct(col("asset_a").as("aid"), col("asset_b").as("partner")),
+        struct(col("asset_b").as("aid"), col("asset_a").as("partner")))).as("o"))
+      .select(col("o.aid").as("aid"), col("o.partner").as("partner"))
       .join(batchIds.select(col("asset_id").as("aid")), Seq("aid"), "left_semi")
     val dup = touching
       .join(batchIds.select(col("asset_id").as("partner"))
@@ -981,12 +985,22 @@ object StreamingPipelines {
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
     requireLongIds("spanIngestBatch", store, batch, idCol)
-    val spans = store.probe(batch, idCol, textCol, excludeBatchIds = true)
+    val b = readOnce(batch, idCol, textCol)
+    val spans = store.probe(b, idCol, textCol, excludeBatchIds = true)
     // fan = false: probe-sized batch by contract
-    ingestStep(store, batchId, graft.operators.Dedup.stripSpans(batch, spans,
+    ingestStep(store, batchId, graft.operators.Dedup.stripSpans(b, spans,
       idCol, textCol, fan = false), maxSegments)(
-      _ => store.ingest(batch, idCol, textCol, batchId))
+      _ => store.ingest(b, idCol, textCol, batchId))
   }
+
+  /** The (id, text) columns of a batch whose probe, rewrite and ORIGINAL
+    * text ingest all read it, materialized up front: the source is
+    * evaluated once per batch, on a first run and on a replay alike. A
+    * lazy checkpoint would not do — its first reader (the replay's sink)
+    * may take it from several concurrent branches, each computing it. */
+  private def readOnce(batch: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    batch.select(col(idCol), col(textCol)).seamCheckpoint(eager = true)
 
   /** Paragraph-dedup scrub at ingest — CCNet stage 1 as a foreachBatch
     * body: scrub the ARRIVING batch against the persisted seen-unit
@@ -1004,9 +1018,10 @@ object StreamingPipelines {
       batchId: Long = VersionedParquetStore.NoBatchId,
       maxSegments: Int = DefaultSegmentBudget): DataFrame = {
     requireLongIds("paragraphIngestBatch", store, batch, idCol)
-    ingestStep(store, batchId, store.scrubProbe(batch, idCol, textCol,
+    val b = readOnce(batch, idCol, textCol)
+    ingestStep(store, batchId, store.scrubProbe(b, idCol, textCol,
       excludeBatchIds = true), maxSegments)(
-      _ => store.ingest(batch, idCol, textCol, batchId))
+      _ => store.ingest(b, idCol, textCol, batchId))
   }
 
   /** The CCNet chain as a foreachBatch body — the streaming twin of

@@ -1,25 +1,32 @@
 package graft.tools
 
 /** Dev tool: time MANY named queries in one session (usage:
-  * ProfileMany <name1,name2,...|@prefix> [reps] [sfDir] [ab:prop]).
+  * ProfileMany <name1,name2,...|@prefix> [reps] [sfDir] [ab:key=value]).
   * One warmup + `reps` timed runs per query, prints per-query
   * min/median and job counts — the cheap way to A/B a batch of queries
   * without paying a JVM+session spin-up per query (BenchOne) or
   * per-job detail (JobProfile). `@p` selects every bench query whose
   * name starts with `p`. Honors SPARK_GRAFT_SET like BenchOne.
   *
-  * With a 4th arg `ab:<sysprop>` each query instead runs 2×reps with
-  * the system property toggled off/on on ALTERNATE reps (same session,
-  * same JIT state — removes the cross-session noise that poisons
-  * separate-JVM A/Bs) and prints min/med per mode plus the delta.
+  * With a 4th arg `ab:<key>=<value>` each query instead runs 2×reps
+  * with the session conf `key` set to `value` on ALTERNATE reps and at
+  * its prior setting on the others (same session, same JIT state —
+  * removes the cross-session noise that poisons separate-JVM A/Bs) and
+  * prints min/med per mode plus the delta. `ab:spark.graft.scale=wide`
+  * A/Bs the small-input branch (fan-outs, materialization, join hints)
+  * against the corpus-scale one.
   */
 object ProfileMany {
   def main(args: Array[String]): Unit = {
     val sel = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val abProp: Option[String] =
-      if (args.length > 3 && args(3).startsWith("ab:")) Some(args(3).drop(3))
+    val ab: Option[(String, String)] =
+      if (args.length > 3 && args(3).startsWith("ab:"))
+        args(3).drop(3).split("=", 2) match {
+          case Array(k, v) => Some((k, v))
+          case _ => sys.error(s"ab: wants <key>=<value>, got '${args(3)}'")
+        }
       else None
     val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
@@ -54,7 +61,7 @@ object ProfileMany {
       fn(spark, sfDir).count()
       ((System.nanoTime() - t0) / 1e9, jobs.get() - j0)
     }
-    abProp match {
+    ab match {
       case None =>
         val results = names.map { name =>
           val fn = all.getOrElse(name, sys.error(s"unknown query: $name"))
@@ -67,19 +74,22 @@ object ProfileMany {
         }
         println(f"[profilemany] TOTAL (${results.size} queries) " +
           f"min=${results.map(_._2).sum}%7.2f med=${results.map(_._3).sum}%7.2f")
-      case Some(prop) =>
+      case Some((key, value)) =>
+        val prior = spark.conf.getOption(key)
+        def toggle(on: Boolean): Unit =
+          if (on) spark.conf.set(key, value)
+          else prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
         val results = names.map { name =>
           val fn = all.getOrElse(name, sys.error(s"unknown query: $name"))
-          System.clearProperty(prop)
+          toggle(false)
           fn(spark, sfDir).count() // warmup both plan shapes
-          System.setProperty(prop, "true")
+          toggle(true)
           fn(spark, sfDir).count()
           val (off, on) = (1 to 2 * reps).map { i =>
-            if (i % 2 == 1) System.clearProperty(prop)
-            else System.setProperty(prop, "true")
+            toggle(i % 2 == 0)
             one(name, fn)._1
           }.zipWithIndex.partition(_._2 % 2 == 0)
-          System.clearProperty(prop)
+          toggle(false)
           val (ofs, ons) = (off.map(_._1).sorted, on.map(_._1).sorted)
           def med(xs: Seq[Double]) = xs((xs.size - 1) / 2)
           println(f"[profilemany-ab] $name%-40s off(min=${ofs.head}%6.2f med=${med(ofs)}%6.2f) " +

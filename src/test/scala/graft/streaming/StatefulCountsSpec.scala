@@ -6,41 +6,52 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.SparkSpec
 import graft.model.ImpressionAndClick
 
-/** KTable-update cadence via mapGroupsWithState: each batch emits the
+/** KTable-update cadence via transformWithState: each batch emits the
   * updated running counts per touched ad (A6 semantics incl. quirks). */
 class StatefulCountsSpec extends SparkSpec {
   import spark.implicits._
 
   test("running per-ad counts accumulate across micro-batches") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[ImpressionAndClick]
-    val out = StatefulCounts.runningAdCounts(spark, in.toDS())
-    val q = out.writeStream
-      .format("memory").queryName("adcounts")
-      .outputMode(OutputMode.Update())
-      .start()
-    def latest() = spark.table("adcounts")
-      .as[StatefulCounts.AdCtrUpdate].collect()
-      .groupBy(_.adId).map { case (k, v) => k -> v.last }
-
+    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    // transformWithState requires the RocksDB provider
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      in.addData(
-        ImpressionAndClick("i1", "u1", "ad1", wasClicked = false),
-        ImpressionAndClick("i2", "u2", "ad1", wasClicked = true),
-        ImpressionAndClick("i3", "u3", "ad2", wasClicked = false))
-      q.processAllAvailable()
-      val s1 = latest()
-      assert(s1("ad1").numImpressions == 1 && s1("ad1").numClicks == 1)
-      assert(s1("ad1").ctr == 1.0)
-      assert(s1("ad2").ctr == 0.0)
+      val in = MemoryStream[ImpressionAndClick]
+      val out = AdCountsProcessor.runningAdCounts(spark, in.toDS())
+      val q = out.writeStream
+        .format("memory").queryName("adcounts")
+        .outputMode(OutputMode.Update())
+        .start()
+      def latest() = spark.table("adcounts")
+        .as[AdCountsProcessor.AdCtrUpdate].collect()
+        .groupBy(_.adId).map { case (k, v) => k -> v.last }
 
-      // second batch: state carries over
-      in.addData(ImpressionAndClick("i4", "u4", "ad1", wasClicked = false))
-      q.processAllAvailable()
-      val s2 = latest()
-      assert(s2("ad1").numImpressions == 2 && s2("ad1").numClicks == 1)
-      assert(s2("ad1").ctr == 0.5)
-    } finally q.stop()
+      try {
+        in.addData(
+          ImpressionAndClick("i1", "u1", "ad1", wasClicked = false),
+          ImpressionAndClick("i2", "u2", "ad1", wasClicked = true),
+          ImpressionAndClick("i3", "u3", "ad2", wasClicked = false))
+        q.processAllAvailable()
+        val s1 = latest()
+        assert(s1("ad1").numImpressions == 1 && s1("ad1").numClicks == 1)
+        assert(s1("ad1").ctr == 1.0)
+        assert(s1("ad2").ctr == 0.0)
+
+        // second batch: state carries over
+        in.addData(ImpressionAndClick("i4", "u4", "ad1", wasClicked = false))
+        q.processAllAvailable()
+        val s2 = latest()
+        assert(s2("ad1").numImpressions == 2 && s2("ad1").numClicks == 1)
+        assert(s2("ad1").ctr == 0.5)
+      } finally q.stop()
+    } finally {
+      prev match {
+        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+    }
   }
 
   test("transformWithState processor matches mapGroupsWithState semantics") {
@@ -62,7 +73,7 @@ class StatefulCountsSpec extends SparkSpec {
         in.addData(ImpressionAndClick("i3", "u3", "ad1", wasClicked = false))
         q.processAllAvailable()
         val last = spark.table("tws_counts")
-          .as[StatefulCounts.AdCtrUpdate].collect()
+          .as[AdCountsProcessor.AdCtrUpdate].collect()
           .groupBy(_.adId).map { case (k, v) => k -> v.last }
         assert(last("ad1").numImpressions == 2 && last("ad1").numClicks == 1)
         assert(last("ad1").ctr == 0.5)
@@ -115,7 +126,7 @@ class StatefulCountsSpec extends SparkSpec {
         }
         val fromStore = store.snapshot()
         val fromTws = spark.table("parity_tws")
-          .as[StatefulCounts.AdCtrUpdate].collect()
+          .as[AdCountsProcessor.AdCtrUpdate].collect()
           .groupBy(_.adId).map { case (k, v) => k -> v.last }
         assert(fromTws.keySet == fromStore.keySet)
         fromTws.foreach { case (ad, u) =>

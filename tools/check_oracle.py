@@ -2,6 +2,7 @@
 """Local mimic of the driver's t2 correctness gate.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+       (env ORACLE_MEMORY_LIMIT, e.g. 6GB: DuckDB's memory cap)
 
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the same parquet
@@ -17,7 +18,10 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    # ORACLE_MEMORY_LIMIT (e.g. "6GB") caps DuckDB below its default of
+    # 80% of physical memory, for hosts that run other work alongside
+    limit = os.environ.get("ORACLE_MEMORY_LIMIT")
+    con = duckdb.connect(config={"memory_limit": limit} if limit else {})
     for t in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(t)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{t}')")
@@ -44,7 +48,14 @@ def main(sf_dir, out_dir):
         if name not in oracle:
             print(f"[rows-only] {name}: rows={len(spark_df)}")
             continue
-        duck_df = con.execute(oracle[name]).fetchdf()
+        try:
+            duck_df = con.execute(oracle[name]).fetchdf()
+        except duckdb.Error as e:
+            # an oracle that cannot run (e.g. out of memory) fails this
+            # query only; the remaining queries are still checked
+            failures += 1
+            print(f"[FAIL] {name}: oracle SQL failed in DuckDB: {str(e)[:200]}")
+            continue
         s, o = canon(spark_df), canon(duck_df)
         ok_schema = list(s.columns) == list(o.columns)
         ok_rows = len(s) == len(o)
