@@ -224,17 +224,19 @@ object Bench {
     // unpersist RPCs contended with the next pass's block operations
     // for most of a pass (warm totals 148/128/106 with flat steal: the
     // LAST pass, running over a finally-clean block store, was the
-    // fast one). Bounded at ~32 s per boundary; all off-clock.
+    // fast one). Only an unchanged count is stable (a stray async
+    // registration raises it), and an empty map ends the drain at once.
+    // Bounded at ~32 s per boundary; all off-clock.
     def interPassDrain(): Unit = {
       val sc = spark.sparkContext
-      var prev = Long.MaxValue
+      var prev = sc.getPersistentRDDs.size.toLong
       var stable = 0
       var iters = 0
-      while (stable < 2 && iters < 15) {
+      while (stable < 2 && iters < 15 && prev > 0) {
         System.gc()
         Thread.sleep(2000L)
         val n = sc.getPersistentRDDs.size.toLong
-        if (n >= prev) stable += 1 else stable = 0
+        if (n == prev) stable += 1 else stable = 0
         prev = n
         iters += 1
       }

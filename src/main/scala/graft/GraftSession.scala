@@ -53,6 +53,26 @@ object GraftSession {
       // reloads the older version from the checkpoint files: slower,
       // same answers (CtrStoreSpec).
       .config("spark.sql.streaming.maxBatchesToRetainInMemory", "1")
+      // Every streaming trigger commits an offset-log file, a commit-log
+      // file and one delta per state store and partition, each through
+      // the checkpoint file manager. Spark's default one goes through
+      // Hadoop's local file system, which without the native Hadoop
+      // library forks `chmod` for every file and `.crc` it creates and
+      // `readlink` for every rename: on a 4-vCPU host 20 commits took
+      // 983 ms and ~400 processes, against 0.03-0.16 ms for a java.nio
+      // write and rename. A warm CTR trigger on the ref_stream benchmark
+      // (2 Spark cores) spent 70 ms in its offset-log commit and 340 ms
+      // in state commits (summed over its two tasks); with
+      // LocalCheckpointFileManager, 3 ms and 12 ms. It handles `file:`
+      // paths only, with java.nio: `.crc` sidecars are still written and
+      // verified on read, Spark's own checksum files (`1.delta.crc`,
+      // spark.sql.streaming.checkpoint.fileChecksum.enabled) are written
+      // through it as before, publishes stay atomic renames and a
+      // no-overwrite publish is an atomic hard link. The layout is unchanged, so a checkpoint
+      // written under either manager restarts under the other; other
+      // schemes go to Spark's default manager.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .config("spark.ui.enabled", "false")
 
   /** Local session sized from the SPARK_GRAFT_CPUS env (driver contract).

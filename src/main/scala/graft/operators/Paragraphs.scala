@@ -98,9 +98,9 @@ object Paragraphs {
     * empty clean_text — the caller's length floor drops it, the same
     * division of labor as [[Dedup.stripSpans]]). `sep` is the unit
     * joiner: a space for token windows, the structural delimiter for
-    * delimiter units. */
+    * delimiter units. `carry` columns of `docs` pass through. */
   def scrubOfUnits(docs: DataFrame, idCol: String, verdicts: DataFrame,
-      sep: String = " "): DataFrame = {
+      sep: String = " ", carry: Seq[String] = Nil): DataFrame = {
     val agg = verdicts.groupBy(col("doc_id"))
       .agg(
         array_join(transform(array_sort(collect_list(
@@ -108,12 +108,12 @@ object Paragraphs {
           x => x("par")), sep).as("clean_text"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
         sum(when(!col("keep"), 1L).otherwise(0L)).as("n_dropped"))
-    docs.select(col(idCol).cast("long").as("doc_id"))
+    docs.select(col(idCol).cast("long").as("doc_id") +: carry.map(col): _*)
       .join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
+      .select(col("doc_id") +: carry.map(col) :+
+        coalesce(col("clean_text"), lit("")).as("clean_text") :+
+        coalesce(col("n_kept"), lit(0L)).as("n_kept") :+
+        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"): _*)
   }
 
   /** One-shot window-unit scrub — the gated composition. */
@@ -169,9 +169,11 @@ final class ParagraphStore(name: String, val w: Int = Paragraphs.WindowTokens,
     * stays a bare scan semi-joined against the BATCH's broadcast keys
     * (batch small, store huge — the [[GramStore.probe]] direction);
     * `excludeBatchIds` restores replay-exactness after the batch's own
-    * ingest has merged ([[GramStore]]'s anti-join argument, verbatim). */
+    * ingest has merged ([[GramStore]]'s anti-join argument, verbatim).
+    * `carry` columns of `batch` pass through to the scrub rows. */
   def scrubProbe(batch: DataFrame, idCol: String, textCol: String,
-      excludeBatchIds: Boolean = false): DataFrame = {
+      excludeBatchIds: Boolean = false,
+      carry: Seq[String] = Nil): DataFrame = {
     val spark = batch.sparkSession
     // key the batch's units ONCE and checkpoint: the store lookup and
     // the within-batch argmin both consume this table — without the
@@ -195,6 +197,6 @@ final class ParagraphStore(name: String, val w: Int = Paragraphs.WindowTokens,
         Seq("par_key"), "left")
       .select(col("doc_id"), col("par_idx"), col("par"), col("par_key"),
         (col("keep") && !coalesce(col("seen"), lit(false))).as("keep"))
-    Paragraphs.scrubOfUnits(batch, idCol, verdicts)
+    Paragraphs.scrubOfUnits(batch, idCol, verdicts, carry = carry)
   }
 }

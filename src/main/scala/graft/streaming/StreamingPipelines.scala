@@ -993,14 +993,15 @@ object StreamingPipelines {
       _ => store.ingest(b, idCol, textCol, batchId))
   }
 
-  /** The (id, text) columns of a batch whose probe, rewrite and ORIGINAL
-    * text ingest all read it, materialized up front: the source is
-    * evaluated once per batch, on a first run and on a replay alike. A
+  /** The (id, text, carried) columns of a batch whose probe, rewrite and
+    * ORIGINAL text ingest all read it, materialized up front: the source
+    * is evaluated once per batch, on a first run and on a replay alike. A
     * lazy checkpoint would not do — its first reader (the replay's sink)
     * may take it from several concurrent branches, each computing it. */
-  private def readOnce(batch: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    batch.select(col(idCol), col(textCol)).seamCheckpoint(eager = true)
+  private def readOnce(batch: DataFrame, idCol: String, textCol: String,
+      carry: Seq[String] = Nil): DataFrame =
+    batch.select((idCol +: textCol +: carry).map(col): _*)
+      .seamCheckpoint(eager = true)
 
   /** Paragraph-dedup scrub at ingest — CCNet stage 1 as a foreachBatch
     * body: scrub the ARRIVING batch against the persisted seen-unit
@@ -1012,15 +1013,18 @@ object StreamingPipelines {
     * scrub; the merge itself is batchId-idempotent. Feeding ordered
     * batches makes the emitted stream equal the one-shot
     * [[graft.operators.Paragraphs.scrubByWindow]] row-for-row
-    * ([[graft.operators.ParagraphStore]]'s equivalence contract). */
+    * ([[graft.operators.ParagraphStore]]'s equivalence contract).
+    * `carry` columns of `batch` ride along to the scrub rows from the
+    * same single read. */
   def paragraphIngestBatch(store: graft.operators.ParagraphStore,
       batch: DataFrame, idCol: String, textCol: String,
       batchId: Long = VersionedParquetStore.NoBatchId,
-      maxSegments: Int = DefaultSegmentBudget): DataFrame = {
+      maxSegments: Int = DefaultSegmentBudget,
+      carry: Seq[String] = Nil): DataFrame = {
     requireLongIds("paragraphIngestBatch", store, batch, idCol)
-    val b = readOnce(batch, idCol, textCol)
+    val b = readOnce(batch, idCol, textCol, carry)
     ingestStep(store, batchId, store.scrubProbe(b, idCol, textCol,
-      excludeBatchIds = true), maxSegments)(
+      excludeBatchIds = true, carry = carry), maxSegments)(
       _ => store.ingest(b, idCol, textCol, batchId))
   }
 
@@ -1058,10 +1062,10 @@ object StreamingPipelines {
       batch: DataFrame, idCol: String, textCol: String, langCol: String,
       batchId: Long, maxSegments: Int): DataFrame =
     paragraphIngestBatch(parStore, batch, idCol, textCol, batchId,
-        maxSegments)
+        maxSegments, carry = Seq(langCol))
       .filter(length(col("clean_text")) > 0)
-      .join(batch.select(col(idCol), col(langCol)), idCol)
-      .select(col(idCol), col(langCol), col("clean_text").as(textCol))
+      .select(col("doc_id").as(idCol), col(langCol),
+        col("clean_text").as(textCol))
 
   /** CCNet's head/middle/tail bucket split as a foreachBatch body —
     * the streaming twin of

@@ -11,18 +11,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The engine's own session configuration ([[GraftSession.builder]]),
+    * so the suites run on the confs the engine ships with. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same correctness pin as GraftSession (see its scaladoc): a
-      // partition-aligned union must never claim clustering it cannot
-      // deliver — UnionPartitioningSpec regression-tests it
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
