@@ -1,32 +1,12 @@
 package graft.model
 
-/** Typed record schemas of the reference's wire format (SURVEY.md §1.3;
-  * reference: Aggregations.java:36-47, StreamStreamJoin.java:171-233).
-  * Case classes give Dataset[T] encoders at the API edge; internal logic
-  * stays in untyped Column ops so Catalyst codegen applies throughout.
+/** Typed record schema of the reference's orders wire format (SURVEY.md
+  * §1.3; reference: Aggregations.java:36-47). The case class gives a
+  * Dataset[T] encoder at the API edge; internal logic stays in untyped
+  * Column ops so Catalyst codegen applies throughout.
   */
 final case class OrderData(
     orderTimeMs: Long,
     orderId: Int,
     itemName: String,
     orderValue: Double)
-
-final case class Impression(
-    impressionTime: Long,
-    impressionId: String,
-    userId: String,
-    adId: String)
-
-final case class Click(
-    clickTime: Long,
-    userId: String,
-    impressionId: String,
-    adId: String,
-    clickId: String)
-
-/** Intermediate join shape (reference: StreamStreamJoin.java:211-233). */
-final case class ImpressionAndClick(
-    impressionId: String,
-    userId: String,
-    adId: String,
-    wasClicked: Boolean)

@@ -1,10 +1,13 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.Paths
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
+
+import graft.operators.ClickThroughRate
 
 /** The reference's CTR KTable as a foreachBatch merge target
   * (SURVEY.md §3.2: update-mode aggregation can't chain after a
@@ -17,10 +20,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   * ([[touchedBy]]) without executing the batch a second time.
   *
   * The merge is fully distributed: each batch's increments (already
-  * aggregated to group cardinality by ctrIncrements) are unioned with
-  * the current table and re-aggregated by key, and the result is
-  * written as a new immutable version directory — the copy-on-write
-  * version-publish machinery lives in [[VersionedParquetStore]]
+  * aggregated to group cardinality by `ClickThroughRate.adCounts`) are
+  * unioned with the current table and re-aggregated by key, and the
+  * result is written as a new immutable version directory — the
+  * copy-on-write version-publish machinery lives in [[VersionedParquetStore]]
   * (shared with the quality-floor store), including the at-least-once
   * replay guard: pass foreachBatch's batchId to [[merge]] and a
   * replayed micro-batch's increments apply exactly once. Nothing is
@@ -29,8 +32,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   * reference's interactive-query analog), not part of the pipeline.
   */
 final class CtrStore(dir: String) {
-
-  def this() = this(Files.createTempDirectory("graft-ctr-store").toString)
 
   // restart adoption: a restarted JVM resumes the committed version
   // (and its replay guard) instead of silently zeroing the KTable —
@@ -77,15 +78,11 @@ final class CtrStore(dir: String) {
     * API; the collect here is the OUTPUT surface (|ads| rows), not the
     * merge path. Requires an active SparkSession. */
   def snapshot(): Map[String, (Long, Long, Double)] = {
-    val spark = SparkSession.active
-    table(spark).collect().map { r =>
-      val (ad, imps, clks) = (r.getString(0), r.getLong(1), r.getLong(2))
-      val ctr =
-        if (clks == 0) 0.0
-        else if (imps == 0) Double.PositiveInfinity
-        else clks.toDouble / imps
-      ad -> (imps, clks, ctr)
-    }.toMap
+    val t = table(SparkSession.active)
+    t.select(col("ad_id"), col("num_impressions"), col("num_clicks"),
+        ClickThroughRate.ctrFaithful(t))
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
+      .toMap
   }
 }
 
@@ -95,4 +92,15 @@ object CtrStore {
     .add("num_impressions", LongType)
     .add("num_clicks", LongType)
     .add("last_batch", LongType)
+
+  /** The store of a query checkpointed at `checkpoint`, kept under
+    * `<checkpoint>/ctr_store` so a restarted query resumes the counts
+    * and the replay guard that belong to its offsets. Local paths only:
+    * the store adopts and retires versions through java.nio. */
+  private[streaming] def atCheckpoint(checkpoint: String): CtrStore = {
+    val uri = new Path(checkpoint).toUri
+    require(Option(uri.getScheme).forall(_ == "file"),
+      s"the CTR store needs a local checkpoint location, got $checkpoint")
+    new CtrStore(Paths.get(uri.getPath, "ctr_store").toString)
+  }
 }

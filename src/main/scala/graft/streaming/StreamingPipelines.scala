@@ -141,16 +141,6 @@ object StreamingPipelines {
       .drop("clk_impression_id")
   }
 
-  /** CTR downstream of the streaming join (SURVEY.md §3.2 caveat): a
-    * second stateful aggregation in update mode can't chain after a
-    * stream-stream join, so the reference's KTable upsert becomes
-    * foreachBatch: aggregate the batch increment distributed
-    * (group-cardinality rows), then merge into `store`. On a cluster
-    * `store` is a Delta/JDBC/state-store merge; tests use an in-memory
-    * store. Returns the started query's writer-side closure. */
-  def ctrIncrements(joinedBatch: DataFrame): DataFrame =
-    ClickThroughRate.adCounts(joinedBatch)
-
   /** The ClickThroughRateApp foreachBatch body, extracted so the
     * broker-only code path is spec-testable (CtrStoreSpec replays it):
     * merge the batch's per-ad increments into the store UNDER THE
@@ -167,7 +157,7 @@ object StreamingPipelines {
     * a double count. */
   def ctrBatchUpdates(store: CtrStore, joinedBatch: DataFrame,
       batchId: Long): DataFrame = {
-    store.merge(ctrIncrements(joinedBatch), batchId)
+    store.merge(ClickThroughRate.adCounts(joinedBatch), batchId)
     val touched = store.touchedBy(joinedBatch.sparkSession, batchId)
     touched.select(col("ad_id"),
       col("num_impressions"), col("num_clicks"),

@@ -19,6 +19,9 @@ import graft.operators.ClickThroughRate
 class CtrStoreSpec extends SparkSpec {
   import spark.implicits._
 
+  private def tempStore(): CtrStore =
+    new CtrStore(Files.createTempDirectory("graft-ctr-store").toString)
+
   test("streaming foreachBatch CTR converges to the batch CTR") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val imps = MemoryStream[(String, Timestamp, String)]
@@ -27,21 +30,33 @@ class CtrStoreSpec extends SparkSpec {
       imps.toDF.toDF("impression_id", "imp_ts", "ad_id"),
       clks.toDF.toDF("impression_id", "clk_ts", "click_id"))
 
-    val store = new CtrStore
+    val store = tempStore()
     val q = joined.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        store.merge(StreamingPipelines.ctrIncrements(batch))
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        store.merge(ClickThroughRate.adCounts(batch), batchId)
       }
       .start()
 
     def ts(s: Long) = new Timestamp(s * 1000)
-    try {
-      // real traffic: ad1 gets i1(clicked)+i2(unclicked), ad2 gets i3(unclicked)
-      imps.addData(("i1", ts(100), "ad1"), ("i2", ts(100), "ad1"),
-        ("i3", ts(110), "ad2"))
-      clks.addData(("i1", ts(120), "c1"))
+    val impRows = Seq(("i1", 100L, "ad1"), ("i2", 100L, "ad1"), ("i3", 110L, "ad2"),
+      ("i4", 110L, "ad3"), ("i5", 200L, "ad1"), ("i6", 200L, "ad2"))
+    val clkRows = Seq(("i1", 120L, "c1"), ("i4", 130L, "c4"), ("i6", 210L, "c6"))
+    def stream(round: Seq[String]): Unit = {
+      imps.addData(impRows.filter(r => round.contains(r._1)).map(r => (r._1, ts(r._2), r._3)))
+      clks.addData(clkRows.filter(r => round.contains(r._1)).map(r => (r._1, ts(r._2), r._3)))
       q.processAllAvailable()
+    }
+    try {
+      // round 1: ad1 gets i1 (clicked) + i2, ad2 gets i3, ad3's only
+      // impression i4 is clicked. Matches emit at once; the unmatched
+      // rows wait for the watermark, so both ads read all-clicked (A7's
+      // Infinity branch) after the first batch
+      stream(Seq("i1", "i2", "i3", "i4"))
+      val inf = Double.PositiveInfinity
+      assert(store.snapshot() == Map("ad1" -> ((0L, 1L, inf)), "ad3" -> ((0L, 1L, inf))))
+      // round 2: ad1 and ad2 keep accumulating in later batches
+      stream(Seq("i5", "i6"))
       // advance both watermarks far past all join windows (sentinel ads)
       imps.addData(("ix", ts(5000), "sentinel"))
       clks.addData(("ix2", ts(5000), "cx"))
@@ -51,22 +66,22 @@ class CtrStoreSpec extends SparkSpec {
       q.processAllAvailable()
 
       val snap = store.snapshot()
-      assert(snap("ad1") == ((1L, 1L, 1.0)))
-      assert(snap("ad2") == ((1L, 0L, 0.0)))
+      assert(snap("ad1") == ((2L, 1L, 0.5)))
+      assert(snap("ad2") == ((1L, 1L, 1.0)))
+      assert(snap("ad3") == ((0L, 1L, inf)), "an all-clicked ad stays at Infinity")
 
       // batch reference on the same data (sans sentinels)
-      val bImps = Seq(("i1", 100000L, "ad1"), ("i2", 100000L, "ad1"),
-        ("i3", 110000L, "ad2")).toDF("impression_id", "impression_time_ms", "ad_id")
-      val bClks = Seq(("i1", 120000L, "c1"))
-        .toDF("impression_id", "click_time_ms", "click_id")
-      val batch = ClickThroughRate
-        .adCounts(ClickThroughRate.joinImpressionsClicks(bImps, bClks))
-        .select(col("ad_id"), col("num_impressions"), col("num_clicks"))
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      batch.foreach { case (ad, (bi, bc)) =>
-        val (si, sc, _) = snap(ad)
-        assert((si, sc) == ((bi, bc)), s"ad $ad: streaming ($si,$sc) != batch ($bi,$bc)")
+      val batch = ClickThroughRate.ctrByAd(
+          impRows.map(r => (r._1, r._2 * 1000, r._3))
+            .toDF("impression_id", "impression_time_ms", "ad_id"),
+          clkRows.map(r => (r._1, r._2 * 1000, r._3))
+            .toDF("impression_id", "click_time_ms", "click_id"))
+        .select(col("ad_id"), col("num_impressions"), col("num_clicks"), col("ctr"))
+        .as[(String, Long, Long, Double)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+      assert(batch.keySet == snap.keySet - "sentinel")
+      batch.foreach { case (ad, b) =>
+        assert(snap(ad) == b, s"ad $ad: streaming ${snap(ad)} != batch $b")
       }
     } finally q.stop()
   }
@@ -76,7 +91,7 @@ class CtrStoreSpec extends SparkSpec {
     // genuinely-runnable broker path, pinned broker-free through the
     // seam function (round-9 finding: the app previously dropped the
     // batchId and collect-emitted the WHOLE table per trigger)
-    val store = new CtrStore
+    val store = tempStore()
     def joinedBatch(rows: Seq[(String, String, Boolean)]) =
       rows.toDF("impression_id", "ad_id", "was_clicked")
 
@@ -129,6 +144,35 @@ class CtrStoreSpec extends SparkSpec {
     assert(after.snapshot()("ad1") == ((4L, 1L, 0.25)))
   }
 
+  test("the app's store lives under its checkpoint and is adopted on restart") {
+    val checkpoint = Files.createTempDirectory("ctr-app-checkpoint").toString
+    val first = CtrStore.atCheckpoint(checkpoint)
+    first.merge(Seq(("ad1", 3L, 1L)).toDF("ad_id", "num_impressions", "num_clicks"),
+      batchId = 7L)
+    assert(Files.isDirectory(Paths.get(checkpoint, "ctr_store")))
+
+    // a second call over the same location = the app restarted
+    val second = CtrStore.atCheckpoint(checkpoint)
+    assert(second.snapshot() == Map("ad1" -> ((3L, 1L, 1.0 / 3))),
+      "the restarted app must resume the committed counts")
+    second.merge(Seq(("ad1", 3L, 1L)).toDF("ad_id", "num_impressions", "num_clicks"),
+      batchId = 7L)
+    assert(second.snapshot()("ad1") == ((3L, 1L, 1.0 / 3)),
+      "the replay guard must survive the restart")
+    assert(CtrStore.atCheckpoint(s"file:$checkpoint").snapshot() == second.snapshot(),
+      "a file: URI names the same store")
+
+    val e = intercept[IllegalArgumentException](CtrStore.atCheckpoint("hdfs://nn/ckpt"))
+    assert(e.getMessage.contains("local checkpoint"))
+  }
+
+  test("ClickThroughRateApp takes exactly bootstrap and checkpoint") {
+    for (args <- Seq(Array("broker:9092"), Array("broker:9092", "/ckpt", "state"))) {
+      val e = intercept[IllegalArgumentException](TopologyApps.ClickThroughRateApp.main(args))
+      assert(e.getMessage.contains("usage: ClickThroughRateApp <bootstrap> <checkpoint>"))
+    }
+  }
+
   /** Runs the CTR join over live streams with `body` as the
     * foreachBatch: ad1 gets i1 (clicked) + i2, ad2 gets i3, then two
     * sentinel rounds push both watermarks past every join window. Each
@@ -168,7 +212,7 @@ class CtrStoreSpec extends SparkSpec {
   test("ctrBatchUpdates executes the joined batch once and emits its touched ads") {
     val rowsOut = spark.sparkContext.longAccumulator("ctr-join-rows")
     val joinedAds = spark.sparkContext.collectionAccumulator[String]("ctr-joined-ads")
-    val store = new CtrStore
+    val store = tempStore()
     val emitted = mutable.Map[Long, Set[String]]()
     val expected = mutable.Map[Long, Set[String]]()
     ctrStream { ad => rowsOut.add(1); joinedAds.add(ad) } { (batch, batchId) =>
@@ -195,12 +239,12 @@ class CtrStoreSpec extends SparkSpec {
     spark.conf.set(key, "1")
     try {
       val rowsOut = spark.sparkContext.longAccumulator("ctr-twice-join-rows")
-      val store = new CtrStore
+      val store = tempStore()
       // a body that executes the stateful batch twice: the second run
       // reloads the evicted older state version from the checkpoint
       ctrStream(_ => rowsOut.add(1)) { (batch, batchId) =>
         batch.count()
-        store.merge(StreamingPipelines.ctrIncrements(batch), batchId)
+        store.merge(ClickThroughRate.adCounts(batch), batchId)
       }
       assert(rowsOut.sum == 2 * joinedRows(store),
         "the body must really execute each batch twice")
