@@ -3,6 +3,7 @@ package graft.operators
 import graft.operators.Materialize.MatOps
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document deduplication suite — the LLM-training-pipeline extension ops
@@ -1027,37 +1028,37 @@ object Dedup {
     * consumes whichever recall profile the pipeline chose (prefix
     * blocking, MinHash-LSH, SimHash bands, or a union of them).
     *
-    * Components via min-label propagation: every doc starts labeled
-    * with its own id; each round propagates labels across edges and
-    * keeps the per-doc minimum; fixpoint when the global label sum
-    * stops decreasing (a strictly monotone scalar — ONE lightweight agg
-    * per round, no driver-side data). The sum is taken as decimal(38,0)
-    * so 64-bit-id corpora cannot overflow it (a wrapped long sum could
-    * in principle spoof the fixpoint test with ANSI off), and an empty
-    * input yields a zero sum, not a NULL-unboxing throw. Rounds needed
-    * = cluster diameter, which for near-dup clusters is tiny (dup
-    * groups are near-cliques); `maxIters` bounds pathological chains.
-    * At 100 TB each round is one equi-join + partial-agg shuffle on
-    * (edge, label) ids only — the GraphX/Pregel cc shape without
-    * carrying a graph library.
-    *
-    * Deterministic and exact at fixpoint; `DedupOps` mirrors it as a
-    * DuckDB recursive CTE for the value-level gate. If `maxIters` is
-    * exhausted before convergence (a similarity CHAIN longer than
-    * maxIters — near-impossible for real dup clusters, which are
-    * near-cliques) a stderr warning is emitted and the partial labels
+    * Returns one `(doc_id, cluster_id, keep)` row per doc of `docs`:
+    * `cluster_id` is the least doc id of the doc's component and `keep`
+    * marks that canonical member. The components come from
+    * [[componentLabels]] (large-star/small-star), which runs over the
+    * PAIR GRAPH only, never the corpus: docs in no pair — the
+    * overwhelming majority of a deduplicated corpus — are unioned back
+    * as singleton rows (`cluster_id = doc_id`, `keep = true`) by one
+    * anti-join after the loop, which is exactly what a corpus-seeded
+    * fixpoint assigns them. Deterministic and exact at fixpoint;
+    * `DedupOps` mirrors it as a DuckDB recursive CTE for the value-level
+    * gate. The loop needs O(log n) rounds for an n-doc component,
+    * whatever order its ids run in; if `maxIters` rounds pass without
+    * the fixpoint, a stderr warning is emitted and the partial labels
     * are returned: clusters may be split, never merged.
     *
-    * The fixpoint loop runs over the PAIR GRAPH only, never the corpus:
-    * labels seed from pair vertices ([[componentLabels]] — its only
-    * DataFrame input is the edge relation, so no corpus scan can reach
-    * a loop round by construction), and docs in no pair — the
-    * overwhelming majority of a deduplicated corpus — are unioned back
-    * as singleton rows (`cluster_id = doc_id`, `keep = true`) after the
-    * loop, which is exactly what the corpus-seeded fixpoint assigns
-    * them. At 100 TB the difference is decisive: each propagation round
-    * shuffles a |pair-vertices|-row label table (the dup-involved
-    * sliver) instead of a |corpus|-row one.
+    * Pairs over ids outside `docs` are dropped entirely before the loop
+    * (both endpoints semi-joined once, never per round), so a
+    * caller-supplied pair source cannot inject phantom doc_id rows, and
+    * two docs connected only THROUGH an unknown id do not merge.
+    * `trustedPairs = true` skips that filter for pair sources derived
+    * from `docs` itself (every internal caller: the LSH/winnow/simhash
+    * banders, semantic cell pairs, image hamming pairs — all generate
+    * endpoints by projecting the same corpus), where its semi-joins are
+    * pure fixed cost. MISUSE HAZARD: with the filter skipped, the loop
+    * treats an unknown id as a doc like any other. Two valid docs
+    * connected only through it MERGE, an unknown id below every member
+    * becomes the cluster's emitted `cluster_id` (and no corpus doc of
+    * that cluster is kept), and every unknown endpoint emits a row for a
+    * doc_id outside the corpus. Pass `trustedPairs = true` ONLY for pair
+    * relations whose both endpoints are projections of `docs(idCol)`,
+    * never for caller-supplied pair tables.
     *
     * Caching contract: with `cacheResult = true` the returned result is
     * an eager `localCheckpoint` of the final label table (|docs| rows ×
@@ -1065,286 +1066,115 @@ object Dedup {
     * iterations, the blocks live in the block manager (NOT the
     * session-lifetime CacheManager), and the ContextCleaner frees them
     * when the DataFrame becomes unreachable: repeated one-shot runs do
-    * not accumulate cached tables. With `cacheResult = false` nothing
-    * is retained and a downstream action recomputes the loop (the
-    * singleton anti-join and the loop output each carry its lineage). */
+    * not accumulate cached tables. With `cacheResult = false` the result
+    * reads the loop's last round checkpoint and recomputes only the
+    * singleton anti-join per downstream action. */
   def nearDupClustersFromPairs(docs: DataFrame, idCol: String,
       pairs: DataFrame, maxIters: Int = 30,
       cacheResult: Boolean = true, trustedPairs: Boolean = false): DataFrame = {
     val p0 = pairs.select(col("doc_a").cast("long").as("doc_a"),
       col("doc_b").cast("long").as("doc_b"))
-    // Pairs over unknown ids are dropped ENTIRELY up front (both
-    // endpoints semi-joined BEFORE the loop, never per round): a
-    // caller-supplied pair source referencing ids outside `docs` would
-    // otherwise inject phantom doc_id rows into the output via the
-    // label union. Filtering both endpoints (r15; r14 filtered only
-    // `dst`) is semantically identical — a phantom-src edge has no
-    // label row and propagates nothing, forever — but it removes the
-    // dead edges from every round's shuffle AND establishes the
-    // invariant [[componentLabels]]'s fused seed needs: every `src` is
-    // a valid vertex. Contract unchanged: two docs connected only
-    // THROUGH an unknown id do not merge.
-    //
-    // `trustedPairs = true` skips the filter for pair sources derived
-    // from `docs` itself (every internal caller: the LSH/winnow/simhash
-    // banders, semantic cell pairs, image hamming pairs — all generate
-    // endpoints by projecting the same corpus). The two semi-joins are
-    // pure fixed cost there; at gate scale they were a measurable slice
-    // of the r14 components-family regression.
-    //
-    // MISUSE HAZARD (sharper since the r15 fused seed): with the filter
-    // skipped, a phantom id is no longer inert. Under the old
-    // seed-then-propagate loop an unknown `src` had no label row and
-    // propagated NOTHING; the fused seed folds raw `src` values into
-    // `min(src)` directly, so a phantom src (a) can become the emitted
-    // cluster_id of valid docs — two valid docs connected only THROUGH
-    // an unknown id now MERGE, and (b) a phantom `dst` emits a label
-    // row for a doc_id outside the corpus. Pass trustedPairs = true
-    // ONLY for pair relations whose both endpoints are projections of
-    // `docs(idCol)` itself, never for caller-supplied pair tables.
-    // The symmetric union's two branches are two COPIES of the pair
-    // source's plan (no cross-branch CSE in Catalyst; ReuseExchange
-    // only dedupes up to the last exchange), so an expensive source —
-    // the LSH banding + verification join — would execute twice while
-    // `edges` materializes. One lazy checkpoint makes the union read
-    // computed rows in both branches.
-    val pSrc = p0.seamCheckpoint(eager = false)
-    var validIdsRef: Option[DataFrame] = None
-    val p = if (trustedPairs) pSrc else {
-      // The corpus is touched exactly ONCE (as in r14): the pair
-      // VERTEX set — pair-sized, tiny next to the corpus — is
-      // validated in one semi-join, and the two per-endpoint filters
-      // then run against that small valid-id table, never the corpus.
-      // Two direct per-endpoint corpus semi-joins would shuffle the
-      // corpus twice (measured +45% on ComponentAb at 4M docs).
-      // `validIds` is lazily checkpointed for the same reason: an
-      // uncached copy consumed by two semi-joins would RE-RUN the
-      // corpus pass per consumer.
-      val ids = docs.select(col(idCol).cast("long").as("id"))
+    val p = if (trustedPairs) p0 else {
+      // The corpus is touched exactly ONCE: the pair VERTEX set —
+      // pair-sized, tiny next to the corpus — is validated in one
+      // semi-join, and the two per-endpoint filters then run against
+      // that small valid-id table, never the corpus. Two direct
+      // per-endpoint corpus semi-joins would shuffle the corpus twice
+      // (measured +45% on ComponentAb at 4M docs). The pairs and
+      // `validIds` have two consumers each, so both are lazily
+      // checkpointed: uncached, each consumer would re-run the pair
+      // source or the corpus pass.
+      val pSrc = p0.seamCheckpoint(eager = false)
       val validIds = pSrc.select(col("doc_a").as("id"))
         .union(pSrc.select(col("doc_b").as("id"))).distinct()
-        .join(ids, Seq("id"), "left_semi")
+        .join(docs.select(col(idCol).cast("long").as("id")), Seq("id"), "left_semi")
         .seamCheckpoint(eager = false)
-      validIdsRef = Some(validIds)
       pSrc.join(validIds.toDF("doc_a"), Seq("doc_a"), "left_semi")
         .join(validIds.toDF("doc_b"), Seq("doc_b"), "left_semi")
-        // USING joins move their key to column 0, leaving (doc_b,
-        // doc_a) — re-fix the order or the POSITIONAL union below
-        // would collapse the symmetric reversal into the original
-        .select(col("doc_a"), col("doc_b"))
     }
-    // r17: no `.distinct()` on the symmetric union — every pair source
-    // in this repo emits CANONICALIZED (doc_a < doc_b), already-distinct
-    // pairs (each banding tail ends in a distinct before verification,
-    // and the verification joins are on unique-keyed doc tables), so
-    // the union of the relation with its strict reversal is
-    // duplicate-free BY CONSTRUCTION and the distinct was a pure extra
-    // corpus-of-pairs shuffle. A degenerate external pair source with
-    // duplicates stays CORRECT (the min fixpoint is idempotent — dup
-    // edges change no label), it just pays proportional join work.
-    // The union is instead hash-partitioned ONCE by `src` (pinned
-    // count, AQE must not fold it away) before the persist: every
-    // propagation round joins edges on src — with the cached table
-    // already hash(src)-partitioned, rounds re-shuffle only the small
-    // label table, never the edge relation (at 100 TB the edge table
-    // is the big side of every round).
-    val par = p.sparkSession.sparkContext.defaultParallelism
-    val edges = p
-      .union(p.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .repartition(par, col("src"))
-      .persist() // re-read every round: never recompute the pair join
+    // Both orientations of every pair from ONE read of the pair source.
+    // No distinct: every pair source in this repo emits canonical
+    // (doc_a < doc_b), already-distinct pairs, and a duplicate edge of a
+    // degenerate external source changes no label.
+    val edges = p.select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
     val labels = componentLabels(edges, maxIters)
-    edges.unpersist() // vertex labels are materialized; edge cache done
     val loopOut = labels.select(col("v").as("doc_id"),
       col("lbl").as("cluster_id"), (col("v") === col("lbl")).as("keep"))
     // Docs outside every pair: trivially their own canonical. One
     // anti-join against the (small) vertex label table — the corpus
-    // never enters a propagation round.
+    // never enters a round.
     val singles = docs.select(col(idCol).cast("long").as("doc_id"))
       .join(labels.select(col("v").as("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster_id"),
         lit(true).as("keep"))
     val out = loopOut.union(singles)
-    val result = if (cacheResult) {
-      val r = out.seamCheckpoint(eager = true)
-      // The eager checkpoint severed the pair lineage — release the
-      // pair-sized pSrc/validIds checkpoint blocks NOW instead of
-      // leaving them for the ContextCleaner: a bench JVM running 250+
-      // queries would otherwise accumulate them until a GC cycle
-      // happens to collect the unreachable Dataset references.
-      pSrc.unpersist()
-      validIdsRef.foreach(_.unpersist())
-      r
-    } else out
-    // With cacheResult = false the returned plan still depends on the
-    // pSrc/validIds checkpoint blocks (localCheckpoint truncates
-    // lineage, so evicted blocks are NOT recomputable) — there the
-    // ContextCleaner frees them once the consumer's action has run and
-    // the references drop.
-    labels.unpersist() // CacheManager entry released either way
-    result
+    if (cacheResult) out.seamCheckpoint(eager = true) else out
   }
 
-  /** The min-label-propagation fixpoint over a symmetric, deduplicated,
-    * corpus-filtered `(src, dst)` edge relation. Deliberately takes
-    * ONLY the edge DataFrame — the corpus cannot be scanned inside the
-    * loop because the loop cannot see it (the structural form of the
-    * "no corpus shuffle per round" scale guarantee; DedupSpec pins the
-    * vertex-sized seed behaviorally). Labels seed from the edge
-    * vertices (`dst` is the post-semi-join endpoint, and the symmetric
-    * union puts every valid endpoint there; a `src` outside the vertex
-    * set has no label row and its edges propagate nothing — unknown-id
-    * pairs stay inert). Returns the persisted/checkpointed `(v, lbl)`
-    * fixpoint over exactly the pair vertices; the caller unpersists. */
+  /** Connected components of a symmetric `(src, dst)` edge relation by
+    * the alternating large-star/small-star steps of Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond" (SoCC 2014).
+    * Deliberately takes ONLY the edge DataFrame, so no corpus scan can
+    * reach a round (DedupSpec pins the vertex-sized label table).
+    * Returns `(v, lbl)` for exactly the vertices of the non-self-loop
+    * edges; at the fixpoint `lbl` is the least vertex of v's component.
+    * After `maxIters` rounds without the fixpoint it warns and returns
+    * each vertex's least neighbour or itself: a component may be split,
+    * never merged with another, because both steps keep the components.
+    *
+    * A round is a large-star then a small-star; each rewrites the edge
+    * multiset, one output edge per input edge, and is a window `min`
+    * per vertex with no join. Large-star links every larger neighbour
+    * of v to the least of v and its neighbours; small-star links v and
+    * its smaller neighbours to the least of those. The alternation ends
+    * with each component a star around its least vertex, after
+    * O(log n) rounds for an n-vertex component in any id order. */
   private[graft] def componentLabels(edges: DataFrame,
       maxIters: Int): DataFrame = {
-    // maxIters COUNTS the fused seed (it starts at 1): maxIters = 1
-    // would return round-1 labels with the while-loop — and therefore
-    // the convergence check — never running at all, then print the
-    // not-converged warning even for graphs already at fixpoint.
-    // Require at least one checked round instead of guessing.
-    require(maxIters >= 2, s"maxIters must be >= 2 (got $maxIters): " +
-      "the fused seed is effective round 1, so at least one more round " +
-      "is needed to observe convergence")
-    // Fresh pointer jumps per jump round (see the loop comment): each
-    // jump self-joins the round's post-propagation table, doubling
-    // pointer reach. JumpHops = 1 measured best: 2 chained jumps cut
-    // a synthetic 32k-chain from 13 to 10 rounds but did NOT reduce
-    // rounds on the real image hamming graph (14 either way) while
-    // adding a self-join barrier to every jump round — the extra
-    // reach only pays on path-like graphs far longer than the bucket
-    // caps allow in practice.
-    val JumpHops = 1
-    // Overflow-proof monotone scalar; NULL (empty input) reads as zero.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val row = df.agg(
-        org.apache.spark.sql.functions.sum(col("lbl").cast("decimal(38,0)"))).head()
-      if (row.isNullAt(0)) java.math.BigDecimal.ZERO else row.getDecimal(0)
-    }
-    // AQE off for the LOOP ONLY (r18, guide §1.2 — fix the algorithm's
-    // driver overhead before config): every propagation round is a
-    // fresh tiny query whose input partitioning is already pinned
-    // (edges hash-partitioned by src once, labels label-table-sized),
-    // so AQE's per-round work — one scheduled job per exchange
-    // materialization plus a replan between them — is pure sequential-
-    // barrier overhead multiplied by O(rounds): measured 110 → 33 jobs
-    // and 4.29 → 3.09 s on pipeline_curate_multimodal_cc (14-round
-    // image graph), 0.87 → 0.73 s on dedup_components. Nothing a round
-    // computes depends on AQE (exact aggregations; partitioning only
-    // moves rows), and the conf is RESTORED in finally — queries
-    // outside the loop keep AQE's coalescing/skew handling, which is
-    // where it earns its keep at 100 TB. The loop's own shuffles
-    // default to spark.sql.shuffle.partitions, sized to the cluster by
-    // GraftSession. Construction is single-threaded per session
-    // (Bench/Verify run queries sequentially; the forked test JVM runs
-    // suites sequentially), so the scoped toggle cannot leak into a
-    // concurrent plan compile.
-    val sparkForConf = edges.sparkSession
-    val AqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = sparkForConf.conf.get(AqeKey, "true")
-    sparkForConf.conf.set(AqeKey, "false")
-    try {
-    // Fused seed (r15): the seed labels (`lbl = v` over distinct `dst`)
-    // followed by round 1's propagate-and-min fold algebraically
-    // collapse to `edges.groupBy(dst).agg(least(dst, min(src)))` — one
-    // shuffle where r14 spent a distinct, a convergence job, a join and
-    // a groupBy. Exact BECAUSE every `src` is a vertex whose seed label
-    // is itself ([[nearDupClustersFromPairs]] filters BOTH pair
-    // endpoints now; the old single-endpoint filter would have let
-    // phantom `src` ids into the min). labelSum materializes the
-    // persist in the same job, so the whole first effective round —
-    // convergence scalar included — is ONE Spark job.
-    var labels = edges.groupBy(col("dst").as("v"))
-      .agg(min(col("src")).as("ms"))
-      .select(col("v"), least(col("v"), col("ms")).as("lbl"))
-      .persist()
-    var sum = labelSum(labels)
-    var converged = false
-    var it = 1 // the fused seed IS effective round 1
-    while (!converged && it < maxIters) {
-      val prop = edges.join(labels, edges("src") === labels("v"))
-        .select(col("dst").as("v"), col("lbl"))
-      // Pointer jumps from round 3 on: shortcut each vertex's label
-      // through the CURRENT label table's pointer graph. Edge flooding
-      // alone converges in O(graph diameter) rounds — each a full
-      // Spark job — so a long similarity CHAIN (dense-threshold
-      // embedding graphs and the image hamming graph produce them)
-      // costs a job launch per hop. The first two rounds stay plain
-      // flooding: near-dup TEXT graphs are clique-like (diameter
-      // ≤ 2-3) and converge before a jump could pay for its extra
-      // joins — measured: text components 2.3 s plain vs 3.0 s
-      // always-jump; semantic keep-far 9.5 s plain vs 3.5 s with the
-      // jump tail.
-      //
-      // r17 note — a "stale-pointer" fusion was tried and REVERTED:
-      // folding lbl²(v)..lblᵏ(v) hops over the round's STARTING labels
-      // into the same min-fold as the propagation makes no progress,
-      // because each min-fold round already path-compresses the
-      // pointer forest to depth ≤ 2 — stale hops stall at the local
-      // minima (measured: the image hamming chain stopped doubling and
-      // fell back to +1-hop flooding, 14 rounds → 30-round bailout).
-      // Only POST-merge jumps (over the freshly propagated table) see
-      // the new edges and double the reach; the JumpHops chained fresh
-      // jumps below multiply per-round reach by 2^JumpHops at the cost
-      // of JumpHops sequential self-join barriers.
-      val merged = labels.select(col("v"), col("lbl")).union(prop)
-        .groupBy(col("v"))
-        .agg(min(col("lbl")).as("lbl"))
-        .persist()
-      // Jump rounds localCheckpoint, NOT persist: the self-joins put
-      // MULTIPLE copies of the round's lineage into the next round's
-      // LOGICAL plan, so a persisted jump loop grows the plan
-      // exponentially — by round ~13 the analyzer/explain machinery
-      // alone runs for minutes on a plan with millions of nodes
-      // (persist caches data, never lineage). The checkpoint truncates
-      // each jump round to a LogicalRDD leaf; plain rounds grow the
-      // plan linearly, which 30 rounds tolerate. LAZY checkpoint
-      // (r15): the labelSum action right below materializes the
-      // checkpoint blocks in the same job that computes the
-      // convergence scalar — one job per jump round.
-      // Stats-clean truncation (r17): Spark 4's Dataset.localCheckpoint
-      // copies the ORIGIN plan's estimated statistics into the new
-      // LogicalRDD leaf (LogicalRDD.fromDataset →
-      // rewriteStatsAndConstraints). In an iterative loop that
-      // COMPOUNDS: a join's sizeInBytes estimate is the product of its
-      // children's, so each round's leaf inherits the previous leaf's
-      // BigInt raised to the round's join count — the bit-length grows
-      // exponentially in rounds, and by round ~13 the driver spends
-      // MINUTES inside BigInteger.multiply under canBroadcastBySize
-      // (jstack-verified; the pre-r17 single-jump loop already paid
-      // megabit-integer stats math in its late rounds). Rebasing the
-      // round's rows through createDataFrame cuts the origin chain:
-      // the checkpoint leaf then carries plain default stats, constant
-      // across rounds. The Row rebase costs one external-row
-      // conversion of the (v, lbl) label table per jump round —
-      // two longs per row, a rounding error next to the round's joins.
-      val next =
-        if (it < 2) merged
-        else {
-          val jumped = (1 to JumpHops).foldLeft(merged) { (m, _) =>
-            m.as("a")
-              .join(m.select(col("v").as("lv"), col("lbl").as("llbl")),
-                col("lbl") === col("lv"))
-              .select(col("v"), least(col("lbl"), col("llbl")).as("lbl"))
-          }
-          jumped.sparkSession.createDataFrame(jumped.rdd, jumped.schema)
-            .seamCheckpoint(eager = false)
-        }
-      val nextSum = labelSum(next)
-      labels.unpersist()
-      if (next ne merged) merged.unpersist()
-      labels = next
-      converged = nextSum.compareTo(sum) == 0 // strictly monotone until fixpoint
-      sum = nextSum
+    require(maxIters >= 1, s"maxIters must be >= 1 (got $maxIters)")
+    // Every edge as the (v, n) neighbour rows of both its endpoints,
+    // ordered by n within v: the running min `lo` is v's least
+    // neighbour on every row, and `i = 1` marks one row per v. The
+    // fixpoint test, the next large-star and the labels read them
+    // without another shuffle.
+    val byV = Window.partitionBy(col("v")).orderBy(col("n"))
+    def withLo(nbrs: DataFrame): DataFrame = nbrs
+      .withColumn("lo", min(col("n")).over(byV))
+      .withColumn("i", row_number().over(byV))
+    var s = withLo(edges.filter(col("src") =!= col("dst"))
+      .select(col("src").as("v"), col("dst").as("n")))
+    var done = false
+    var it = 0
+    while (!done && it < maxIters) {
+      val large = s.filter(col("n") > col("v"))
+        .select(col("n").as("src"), least(col("v"), col("lo")).as("dst"))
+      // src > dst on every large-star edge; the row holding src's least
+      // neighbour m emits the edge src–m, every other row dst–m
+      val small = large
+        .withColumn("m", min(col("dst")).over(Window.partitionBy(col("src"))))
+        .select(when(col("dst") === col("m"), col("src"))
+          .otherwise(col("dst")).as("a"), col("m").as("b"))
+      s = withLo(small.select(explode(array(
+          struct(col("a").as("v"), col("b").as("n")),
+          struct(col("b").as("v"), col("a").as("n")))).as("e"))
+        .select(col("e.v"), col("e.n")))
+        .seamCheckpoint(eager = false)
+      // The fixpoint: no vertex that has a smaller neighbour has a
+      // second neighbour, i.e. each component is a star around its
+      // least vertex. One job, which also materializes the checkpoint
+      // (Dataset.count would add a single-partition shuffle: two jobs).
+      done = s.filter(col("lo") < col("v") && col("n") > col("lo"))
+        .queryExecution.toRdd.count() == 0
       it += 1
     }
-    if (!converged)
+    if (!done)
       System.err.println(s"[nearDupClusters] WARNING: not converged after " +
-        s"$maxIters rounds — a >$maxIters-hop similarity chain exists; " +
-        "clusters may be split (never merged). Raise maxIters.")
-    labels
-    } finally sparkForConf.conf.set(AqeKey, aqePrev)
+        s"$maxIters rounds; clusters may be split (never merged). " +
+        "Raise maxIters.")
+    s.filter(col("i") === 1).select(col("v"), least(col("v"), col("lo")).as("lbl"))
   }
 
   /** Canonical selection by QUALITY over near-dup clusters: instead of

@@ -567,7 +567,7 @@ object SimilaritySearch {
 
   /** SemDeDup's published keep policy (arXiv:2303.09540 §3): within
     * each semantic-duplicate CLUSTER (connected components over the
-    * verified pair graph — the shared min-label machinery) keep the
+    * verified pair graph — the shared component loop) keep the
     * member FARTHEST from its cell centroid, the diversity-maximizing
     * choice: the member nearest the centroid is the most redundant
     * with the cell's bulk. "Farthest" ranks on the exact relative

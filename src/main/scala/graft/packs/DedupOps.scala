@@ -818,7 +818,8 @@ object DedupOps extends QueryPack {
 
   /** DuckDB twin of [[graft.operators.Dedup.nearDupClusters]]: true
     * connected components by recursive reachable-label enumeration —
-    * min reachable id == the fixpoint of Spark's min-label propagation. */
+    * min reachable id == the component-least label Spark's
+    * large-star/small-star loop reaches at its fixpoint. */
   val componentsOracle: String =
     s"""WITH RECURSIVE $ngramPairCtes,
         |${componentCtes("documents", Dedup.NgramThreshold)}

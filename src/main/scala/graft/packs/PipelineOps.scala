@@ -422,16 +422,16 @@ object PipelineOps extends QueryPack {
     val hashes = graft.operators.Multimodal.imageAHashes(spark,
         graft.operators.Multimodal.syntheticPngAssets(spark, docs))
       .toDF()
-    // pairs materialize once (the component loop re-reads them and the
-    // vertex draw below is a second consumer — without this each re-runs
-    // the banding join over the decoded hashes)
+    // pairs materialize once (the component loop and the vertex draw
+    // below both read them — without this each re-runs the banding join
+    // over the decoded hashes)
     val pairs = graft.operators.Multimodal.imageHammingPairs(hashes)
       .select(col("asset_a").as("doc_a"), col("asset_b").as("doc_b"))
       .seamCheckpoint(false)
-    // r14: the component loop now vertex-seeds internally
-    // (Dedup.componentLabels), but passing the pair vertices as the
-    // corpus still skips the singleton anti-join entirely — an asset in
-    // no pair can never enter the dup set this consumer filters for
+    // the component loop seeds from the pair vertices itself
+    // (Dedup.componentLabels); passing them as the corpus too keeps the
+    // singleton anti-join pair-sized — an asset in no pair can never
+    // enter the dup set this consumer filters for
     val verts = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val dup = Dedup.nearDupClustersFromPairs(verts, "doc_id", pairs,

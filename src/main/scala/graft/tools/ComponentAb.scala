@@ -6,35 +6,54 @@ import org.apache.spark.sql.functions._
   * corpus with a small pair graph — the regime the vertex-seeded loop
   * (r14) targets. At sf0.1 the gate corpus is 5,000 rows, so the
   * corpus-seeded vs vertex-seeded difference drowns in per-round job
-  * overhead; here the corpus is `nDocs` (default 2M) rows against
-  * `nPairs` (default 2,000) chain pairs, which makes each propagation
-  * round's label-table shuffle visible. Chains (not 2-cliques) force
-  * MULTIPLE propagation rounds — each of which the corpus-seeded loop
-  * pays as a corpus-sized shuffle.
-  * Usage: ComponentAb [nDocs] [nChains] [chainLen] [reps]. */
+  * overhead; here the corpus is `nDocs` (default 4M) rows against
+  * `nChains` (default 1,000) paths of `chainLen` (default 16) ids, which
+  * makes each round's shuffles visible. Paths (not 2-cliques) force
+  * MULTIPLE rounds.
+  *
+  * Each rep runs the paths in two id layouts: `sorted` (path c is the
+  * ids [c*chainLen, (c+1)*chainLen) in order) and `shuffled` (the same
+  * paths with ids permuted by a fixed seed), because a loop's round
+  * count can depend on whether ids run in path order. Every call prints
+  * its wall time and the Spark jobs it started (a SparkListener count).
+  * Usage: ComponentAb [nDocs] [nChains] [chainLen] [reps];
+  * nChains * chainLen must fit an Int (the permutation is built on the
+  * driver). */
 object ComponentAb {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 4000000L
-    val nChains = if (args.length > 1) args(1).toLong else 1000L
-    val chainLen = if (args.length > 2) args(2).toLong else 16L
+    val nChains = if (args.length > 1) args(1).toInt else 1000
+    val chainLen = if (args.length > 2) args(2).toInt else 16
     val reps = if (args.length > 3) args(3).toInt else 5
     val spark = graft.GraftSession.local()
+    import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        { jobs.incrementAndGet(); () }
+    })
     val docs = spark.range(nDocs).select(col("id").as("doc_id"))
       .localCheckpoint(true)
-    // chain c occupies ids [c*chainLen, (c+1)*chainLen); edge j→j+1
-    val hops = chainLen - 1
-    val pairs = spark.range(nChains * hops)
-      .select((expr(s"id div $hops") * chainLen + col("id") % hops).as("doc_a"))
-      .withColumn("doc_b", col("doc_a") + 1)
-      .localCheckpoint(true)
-    for (i <- 1 to reps) {
+    val n = nChains * chainLen
+    val perm = new scala.util.Random(42).shuffle((0L until n.toLong).toVector)
+    def paths(id: Int => Long) =
+      (for (c <- 0 until nChains; j <- 0 until chainLen - 1)
+        yield (id(c * chainLen + j), id(c * chainLen + j + 1)))
+        .toDF("doc_a", "doc_b").localCheckpoint(true)
+    val layouts = Seq("sorted" -> paths(_.toLong), "shuffled" -> paths(perm))
+    for (i <- 1 to reps; (layout, pairs) <- layouts) {
+      val j0 = jobs.get()
       val t0 = System.nanoTime()
-      val n = graft.operators.Dedup
-        .nearDupClustersFromPairs(docs.toDF(), "doc_id", pairs.toDF())
+      val dups = graft.operators.Dedup
+        .nearDupClustersFromPairs(docs.toDF(), "doc_id", pairs)
         .filter(!col("keep")).count()
-      println(f"[componentab] docs=$nDocs chains=$nChains len=$chainLen iter $i: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s (dups=$n)")
+      val secs = (System.nanoTime() - t0) / 1e9
+      // onJobStart arrives on the asynchronous listener bus: let it
+      // drain (outside the timed region) before reading the count
+      Thread.sleep(500)
+      println(f"[componentab] docs=$nDocs chains=$nChains len=$chainLen " +
+        f"layout=$layout iter $i: $secs%.2f s jobs=${jobs.get() - j0} (dups=$dups)")
     }
     spark.stop()
   }

@@ -84,17 +84,32 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: component labels == driver union-find on random graphs (fused-seed loop)") {
-    // the r15 rewrite's exactness pin: random pair sets (including
+    // the component loop's exactness pin: random pair sets (including
     // pairs over ids OUTSIDE the corpus, self-loops, duplicates,
     // chains and hubs) must produce exactly the component-minimum
     // clustering a classic union-find computes — with unknown-id pairs
     // ignored entirely (no phantoms, no merging THROUGH an unknown id)
-    val genPairs = Gen.nonEmptyListOf(for {
+    val genRandom = Gen.nonEmptyListOf(for {
       a <- Gen.chooseNum(0L, 40L)
       b <- Gen.chooseNum(0L, 40L)
     } yield (a, b))
+    // long paths over the valid ids in a shuffled order, and hubs
+    val genPath = for {
+      seed <- Gen.long
+      k <- Gen.chooseNum(2, 30)
+    } yield new scala.util.Random(seed).shuffle((0L until 30L).toList).take(k)
+      .sliding(2).map(p => (p(0), p(1))).toList
+    val genHub = for {
+      hub <- Gen.chooseNum(0L, 29L)
+      spokes <- Gen.listOf(Gen.chooseNum(0L, 29L))
+    } yield spokes.map(s => (hub, s))
+    val genPairs = for {
+      random <- genRandom
+      path <- Gen.oneOf(Gen.const(Nil), genPath)
+      hub <- Gen.oneOf(Gen.const(Nil), genHub)
+    } yield random ++ path ++ hub
     check(Prop.forAll(genPairs) { pairs =>
-      val corpus = 0L until 30L // ids 31..40 are unknown
+      val corpus = 0L until 30L // ids 30..40 are unknown
       val docs = corpus.map(i => (i, s"d$i")).toDF("doc_id", "text")
       val out = graft.operators.Dedup
         .nearDupClustersFromPairs(docs, "doc_id", pairs.toDF("doc_a", "doc_b"))

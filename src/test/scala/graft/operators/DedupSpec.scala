@@ -41,18 +41,32 @@ class DedupSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions.col
-    // a pure path graph — worst case for edge flooding (diameter 60 >
-    // maxIters 30, so the pre-jump loop would emit its split-cluster
-    // warning); path doubling closes it in O(log n) jump rounds
-    val n = 61L
-    val chainDocs = (0L until n).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val chainPairs = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val out = Dedup.nearDupClustersFromPairs(chainDocs, "doc_id", chainPairs)
-      .select(col("doc_id"), col("cluster_id"))
-      .as[(Long, Long)].collect()
-    assert(out.length == n)
-    assert(out.forall(_._2 == 0L),
-      s"every chain member must reach the component min: ${out.filter(_._2 != 0L).take(5).toSeq}")
+    // pure path graphs — the worst case for label flooding (diameter 60
+    // > maxIters 30) — in id order and with ids shuffled by a fixed
+    // seed: a loop whose round count depends on ids running in path
+    // order splits the shuffled ones. The loop must also reach its
+    // fixpoint, not just happen to label right: no not-converged warning.
+    val shuffled = new scala.util.Random(7)
+    for (ids <- Seq((0L until 61L).toVector,
+        shuffled.shuffle((0L until 61L).toVector),
+        shuffled.shuffle((0L until 200L).toVector),
+        shuffled.shuffle((0L until 1024L).toVector))) {
+      val n = ids.length.toLong
+      val chainDocs = (0L until n).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      val chainPairs = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+        .toDF("doc_a", "doc_b")
+      val err = new java.io.ByteArrayOutputStream()
+      val stderr = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      val out = try Dedup.nearDupClustersFromPairs(chainDocs, "doc_id", chainPairs)
+        .select(col("doc_id"), col("cluster_id"))
+        .as[(Long, Long)].collect()
+      finally System.setErr(stderr)
+      assert(out.length == n)
+      assert(out.forall(_._2 == 0L),
+        s"every chain member must reach the component min: ${out.filter(_._2 != 0L).take(5).toSeq}")
+      assert(!err.toString.contains("not converged"), s"$n-doc path: $err")
+    }
   }
 
   test("soft dedup weights: 1/cluster_size, singletons at 1.0, mass conserved") {
@@ -229,8 +243,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("nearDupClusters: 64-bit-scale ids converge exactly (decimal label sum)") {
-    // two ids near Long.MaxValue whose long sum wraps negative — the
-    // decimal(38,0) fixpoint scalar must stay exact
+    // two ids near Long.MaxValue, whose long sum would wrap negative:
+    // the loop's labels must stay exact at the top of the id range
     val big = Seq(
       (Long.MaxValue - 1L, "alpha beta gamma delta epsilon zeta eta theta iota"),
       (Long.MaxValue, "alpha beta gamma delta epsilon zeta eta theta kappa"),
